@@ -4,8 +4,12 @@ import java.io.File
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
+import com.fasterxml.jackson.core.json.JsonReadFeature
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.json.JsonMapper
 import graft.RuleCompiler.RoutingPlan
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import scala.jdk.CollectionConverters._
 
 /** Resumable execution with per-partition-range lineage — the north star's
   * checkpoint requirement: each completed range persists a manifest carrying
@@ -78,11 +82,12 @@ object Checkpoint {
       val mf = manifestDir.resolve(s"range_$rangeId.json")
       val fp = filesFingerprint(files.toSeq)
       readManifest(mf) match {
-        case Some(m) if m("rule_version_hash") == plan.ruleVersionHash &&
-          m("input_fingerprint") == fp =>
+        case Some(m) if m.path("rule_version_hash").asText == plan.ruleVersionHash &&
+          m.path("input_fingerprint").asText == fp =>
           RangeResult(rangeId, skipped = true,
-            m("emitted").toLong, m("matched").toLong, m("unmatched").toLong,
-            parseSinkCounts(m("sink_counts")))
+            m.path("emitted").asLong, m.path("matched").asLong, m.path("unmatched").asLong,
+            m.path("sink_counts").properties.asScala
+              .map(e => e.getKey -> e.getValue.asLong).toMap)
         case _ if budget <= 0 =>
           RangeResult(rangeId, skipped = true, 0, 0, 0, Map.empty)
         case _ =>
@@ -117,51 +122,32 @@ object Checkpoint {
     RunSummary(results)
   }
 
-  // --- minimal dependency-free JSON for our own manifest format ------------
+  // --- manifest JSON -------------------------------------------------------
 
-  private def esc(s: String): String =
-    s.flatMap { case '"' => "\\\""; case '\\' => "\\\\"; case c => c.toString }
+  /** Manifest reader/writer. Raw control characters are accepted on read:
+    * older manifests escaped only `"` and `\\` inside sink tags.
+    */
+  private val json = JsonMapper.builder()
+    .enable(JsonReadFeature.ALLOW_UNESCAPED_CONTROL_CHARS).build()
 
   private def writeManifest(
       path: java.nio.file.Path,
       plan: RoutingPlan,
       inputFp: String,
       r: RangeResult): Unit = {
-    val sinks = r.sinkCounts.toSeq.sortBy(_._1)
-      .map { case (k, v) => s""""${esc(k)}":$v""" }.mkString("{", ",", "}")
-    val json =
-      s"""{"range_id":${r.rangeId},
-         |"input_fingerprint":"$inputFp",
-         |"rule_version_hash":"${plan.ruleVersionHash}",
-         |"emitted":${r.emitted},"matched":${r.matched},"unmatched":${r.unmatched},
-         |"sink_counts":$sinks}""".stripMargin
+    val doc = json.createObjectNode()
+      .put("range_id", r.rangeId)
+      .put("input_fingerprint", inputFp)
+      .put("rule_version_hash", plan.ruleVersionHash)
+      .put("emitted", r.emitted).put("matched", r.matched).put("unmatched", r.unmatched)
+    val sinks = doc.putObject("sink_counts")
+    r.sinkCounts.toSeq.sortBy(_._1).foreach { case (k, v) => sinks.put(k, v) }
     val tmp = path.resolveSibling(path.getFileName.toString + ".tmp")
-    Files.write(tmp, json.getBytes(StandardCharsets.UTF_8))
+    Files.write(tmp, json.writeValueAsBytes(doc))
     Files.move(tmp, path, StandardCopyOption.ATOMIC_MOVE,
       StandardCopyOption.REPLACE_EXISTING)
   }
 
-  /** Parse our own manifests (flat string/number fields + sink_counts
-    * object) — no JSON library in the dependency budget.
-    */
-  private def readManifest(path: java.nio.file.Path): Option[Map[String, String]] = {
-    if (!Files.exists(path)) return None
-    val s = new String(Files.readAllBytes(path), StandardCharsets.UTF_8)
-    val fields = scala.collection.mutable.Map[String, String]()
-    val scalar = """"([a-z_]+)":(?:"((?:[^"\\]|\\.)*)"|(-?[0-9]+))""".r
-    for (m <- scalar.findAllMatchIn(s)) {
-      val v = Option(m.group(2)).getOrElse(m.group(3))
-      if (m.group(1) != "sink_counts") fields(m.group(1)) = v
-    }
-    val sinksRe = """"sink_counts":(\{[^}]*\})""".r
-    sinksRe.findFirstMatchIn(s).foreach(m => fields("sink_counts") = m.group(1))
-    Some(fields.toMap)
-  }
-
-  private def parseSinkCounts(json: String): Map[String, Long] = {
-    val entry = """"((?:[^"\\]|\\.)*)":(-?[0-9]+)""".r
-    entry.findAllMatchIn(json)
-      .map(m => m.group(1).replace("\\\"", "\"").replace("\\\\", "\\") -> m.group(2).toLong)
-      .toMap
-  }
+  private def readManifest(path: java.nio.file.Path): Option[JsonNode] =
+    if (Files.exists(path)) Some(json.readTree(path.toFile)) else None
 }

@@ -29,21 +29,20 @@ final case class FusedRule(
 
 /** Driver-compiled, executor-executed rule table for [[TagRewriteExpr]].
   *
-  * Why this exists: the pure-Column compilation (RuleCompiler.compile)
-  * evaluates each rule's regex up to 1 + #backrefs times per row (`rlike`
-  * for the condition, then one `regexp_extract` per `$n`), and every one of
-  * those ops allocates a fresh `Matcher` + `String` + intermediate
-  * `UTF8String`s. Profiling on the 32-core sandbox showed that allocation —
-  * not CPU — caps N→4N scaling (raw regex with reused matchers scales at
-  * ~0.81 efficiency; the same work with per-call allocation measurably
-  * worse, and the Column plan on top of it reached only ~0.45). This table
-  * evaluates the WHOLE first-match-wins cascade in one pass per row:
-  * patterns compiled once per plan, matchers + StringBuilder reused
-  * per-thread, each key value converted UTF8String→String at most once per
-  * row, and the winning rule's template rendered directly from the live
-  * `Matcher` — zero redundant regex executions.
+  * Why this exists: a cascade of Spark built-ins (`CASE WHEN` over `rlike`
+  * plus one `regexp_extract` per `$n`) evaluates each rule's regex up to
+  * 1 + #backrefs times per row, and every one of those ops allocates a
+  * fresh `Matcher` + `String` + intermediate `UTF8String`s. Profiling on a
+  * 32-core host showed that allocation — not CPU — caps N→4N scaling (raw
+  * regex with reused matchers scales at ~0.81 efficiency; the built-in
+  * cascade reached only ~0.45). This table evaluates the WHOLE
+  * first-match-wins cascade in one pass per row: patterns compiled once per
+  * plan, matchers + StringBuilder reused per-thread, each key value
+  * converted UTF8String→String at most once per row, and the winning rule's
+  * template rendered directly from the live `Matcher` — zero redundant
+  * regex executions.
   *
-  * Semantics are byte-identical to the Column path (asserted by the
+  * Semantics match the scalar [[graft.Oracle]] (asserted by the
   * differential spec): empty-value skip for normal rules
   * (out_rewrite_tag_filter.rb:120), invert without backrefs (:122-124),
   * absent/out-of-range `$n` → "" (:147-153), Ruby-capitalize (:150),
@@ -208,9 +207,9 @@ object CompiledRuleTable {
   *
   * children(0) = tag column (string), children(1..) = the distinct rule key
   * columns in [[CompiledRuleTable]] index order. Output:
-  * `struct<tag string, label string>`, null when no rule fires — plugs into
-  * [[graft.Router]] exactly like the CaseWhen plan from
-  * `RuleCompiler.compile`.
+  * `struct<tag string, label string>`: null when no rule fires, `tag = null`
+  * when a rule fired but the row is dropped — the `routed` column of
+  * [[graft.RuleCompiler.RoutingPlan]] that [[graft.Router]] filters on.
   *
   * `doGenCode` ships the compiled table as a plan reference object and emits
   * a single call into [[CompiledRuleTable.rewrite]], so the expression stays
@@ -265,12 +264,13 @@ object TagRewriteExpr {
 
   /** Ruby `tag.split('.')` for `${tag_parts[n]}` (:165-168). Keeps interior
     * empties; trailing-empty handling is unobservable (out-of-range reads
-    * are "" either way), matching the Column path's `split(tag, "\\.", -1)`.
+    * are "" either way).
     */
   def splitDots(s: String): Array[String] = s.split("\\.", -1)
 
-  /** Ruby `String#capitalize` (:150): upcase first char, downcase the rest —
-    * identical to the Column path's upper(substring(c,1,1))+lower(rest).
+  /** Ruby `String#capitalize` (:150): upcase first char, downcase the rest.
+    * NOT Spark `initcap`, which title-cases every whitespace-separated word
+    * ("foo bar" → "Foo Bar" vs Ruby "Foo bar").
     */
   def appendCapitalized(sb: java.lang.StringBuilder, s: String): Unit = {
     if (s.nonEmpty) {

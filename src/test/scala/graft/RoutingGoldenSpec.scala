@@ -346,7 +346,7 @@ class RoutingGoldenSpec extends AnyFunSuite {
     assert(slashForm == Map(0 -> ("rewritten.simple", None)))
     // duplicate detection treats /re/ and re as the SAME compiled pattern
     intercept[RuleConfigError] {
-      RuleCompiler.compile(Seq(
+      RuleCompiler.compileFused(Seq(
         Rule("message", "/^x$/", "a"),
         Rule("message", "^x$", "b")),
         RoutingConfig(), df.schema, "source")
@@ -407,7 +407,6 @@ class RoutingGoldenSpec extends AnyFunSuite {
     assert(!routed.contains(2)) // empty value skips the normal rule (R-EMPTY)
   }
 
-  // --- null tag column: both compilations treat it as "" ------------------
   test("scrub: maximal-subpart replacement vectors (Ruby String#scrub parity)") {
     import graft.expressions.ScrubToUtf8
     def s(bytes: Int*): String =
@@ -426,7 +425,8 @@ class RoutingGoldenSpec extends AnyFunSuite {
     assert(s('o', 'k', 0xc3, 0xa9, '!') == "oké!") // valid passthrough
   }
 
-  test("null tag column: fused and column plans agree (null tag = empty)") {
+  // --- null tag column is routed as the empty tag ------------------------
+  test("null tag column routes as the empty tag") {
     val schema = StructType(Seq(
       StructField("rid", IntegerType, nullable = false),
       StructField("status", StringType, nullable = true),
@@ -439,26 +439,28 @@ class RoutingGoldenSpec extends AnyFunSuite {
       new java.util.ArrayList[Row](
         scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), schema)
     val rules = Seq(Rule("status", "^5..$", "alert.${tag}"))
-    def res(plan: RuleCompiler.RoutingPlan) =
-      Router.route(df, plan).collect()
-        .map(r => r.getAs[Int]("rid") -> r.getAs[String]("new_tag")).toMap
-    val fused = res(RuleCompiler.compileFused(rules, RoutingConfig(), schema, "source"))
-    val column = res(RuleCompiler.compile(rules, RoutingConfig(), schema, "source"))
-    assert(fused == column)
-    assert(fused == Map(0 -> "alert.", 2 -> "alert.web.api")) // null tag ≡ ""
+    val got = Router.route(df, RuleCompiler.compileFused(rules, RoutingConfig(), schema, "source"))
+      .collect().map(r => r.getAs[Int]("rid") -> r.getAs[String]("new_tag")).toMap
+    assert(got == Map(0 -> "alert.", 2 -> "alert.web.api")) // null tag ≡ ""
   }
 
   // --- drop metrics (:96-99 trace) ----------------------------------------
   test("observe metrics: emitted / matched / unmatched") {
-    val rules = Seq(Rule("key", "^(odd)$", "$1"))
-    val df = frame(Seq("key"), "input", Seq(Seq("odd"), Seq("even"), Seq("odd")))
+    val rules = Seq(
+      Rule("key", "^(odd)$", "$1"),
+      Rule("key", "^same$", "${tag}"), // fires, tag unchanged, no label → dropped
+      Rule("key", "^relabel$", "${tag}", label = Some("lbl"))) // unchanged tag kept by label
+    val df = frame(Seq("key"), "input",
+      Seq(Seq("odd"), Seq("even"), Seq("odd"), Seq("same"), Seq("relabel")))
     val obs = org.apache.spark.sql.Observation()
-    val plan = RuleCompiler.compile(rules, RoutingConfig(), df.schema, "source")
-    val n = Router.routeObserved(df, plan, obs).count()
-    assert(n == 2)
+    val plan = RuleCompiler.compileFused(rules, RoutingConfig(), df.schema, "source")
+    val kept = Router.routeObserved(df, plan, obs).collect()
+      .map(r => (r.getAs[String]("new_tag"), Option(r.getAs[String]("new_label"))))
+    assert(kept.sorted.toSeq ==
+      Seq(("input", Some("lbl")), ("odd", None), ("odd", None)))
     val m = obs.get
-    assert(m("emitted") == 3L)
-    assert(m("matched") == 2L)
-    assert(m("unmatched") == 1L)
+    assert(m("emitted") == 5L)
+    assert(m("matched") == 4L) // a rule fired: odd ×2, same (then dropped), relabel
+    assert(m("unmatched") == 2L) // dropped: even (no rule fired) + same (fired, dropped)
   }
 }
