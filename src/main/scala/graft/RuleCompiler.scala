@@ -2,6 +2,8 @@ package graft
 
 import java.util.regex.{Pattern, PatternSyntaxException}
 
+import scala.collection.mutable.ArrayBuffer
+
 import graft.expressions.{CompiledRuleTable, FusedRule, TagRewriteExpr}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -50,8 +52,17 @@ object RuleCompiler {
 
     validate(rules, cfg)
 
-    val keys = rules.map(_.key).distinct
-    val keyIdx = keys.zipWithIndex.toMap
+    // children(0) is the tag; each rule key reuses the first child that is
+    // the same column expression (Column equality ignores call-site origin),
+    // e.g. a rule keyed on the tag column, so no column is evaluated and
+    // decoded twice per row. Binary keys resolve through ScrubToUtf8 and
+    // keep their own child.
+    val children = ArrayBuffer(coalesce(col(tagCol).cast(StringType), lit("")))
+    val keyIdx = rules.map(_.key).distinct.map { k =>
+      val c = KeyPath.resolve(k, schema)
+      val i = children.indexOf(c)
+      k -> (if (i >= 0) i else { children += c; children.length - 1 })
+    }.toMap
     val fused = rules.map { r =>
       val pat = r.normalizedPattern // accepts /re/ and bare forms (:24)
       val groupCount =
@@ -61,7 +72,7 @@ object RuleCompiler {
             throw new RuleConfigError(
               s"rule pattern is not a valid Java regex: ${r.pattern} (${e.getMessage})")
         }
-      FusedRule(keyIdx(r.key) + 1, pat, r.invert, r.label.orNull,
+      FusedRule(keyIdx(r.key), pat, r.invert, r.label.orNull,
         TemplateParser.parse(r.tag).toArray, groupCount)
     }
     // tag stripped for placeholder purposes ONLY (:155-156); prefix compiles
@@ -74,10 +85,8 @@ object RuleCompiler {
     val table =
       CompiledRuleTable(fused.toArray, cfg.capitalizeRegexBackreference,
         cfg.hostname, stripRegex)
-    val children =
-      ColumnBridge.expression(coalesce(col(tagCol).cast(StringType), lit(""))) +:
-        keys.map(k => ColumnBridge.expression(KeyPath.resolve(k, schema)))
-    val routed = ColumnBridge.column(TagRewriteExpr(children, table))
+    val routed = ColumnBridge.column(
+      TagRewriteExpr(children.map(ColumnBridge.expression).toSeq, table))
 
     RoutingPlan(rules, cfg, routed, ruleVersionHash(rules, cfg))
   }

@@ -101,6 +101,63 @@ class OracleDifferentialSpec extends AnyFunSuite {
     }
   }
 
+  test("engine ≡ scalar oracle through parquet: result cache over reused reader buffers") {
+    // Written without dictionary encoding and read back from parquet, so the
+    // vectorized reader hands out UTF8Strings over its reused per-batch byte
+    // buffers; ~10k rows per file span several 4096-row batches
+    // per partition. Every partition holds more distinct tuples than the
+    // cache's 4096 entries: in the first half 55% of rows repeat a few hot
+    // keys (the full cache keeps serving hits), in the second half 95% are
+    // unique (inserts are refused, then probing stops). Hot keys recur under
+    // different tags with ${tag} / ${tag_parts[n]} templates, so a cache
+    // keyed on the rule key alone would render the wrong tag. null and ""
+    // both occur, and one key is larger than the cache's byte budget.
+    val n = 40000
+    val hot = Array[String]("www.google.com", "maps.example.com", "", null, "foo")
+    val tags = Array("input.access", "game.production.api", "a.b")
+    val big = "x" * ((1 << 20) + 7)
+    def domain(i: Int): String =
+      if (i == 5 || i == n - 5) big
+      else if (i < n / 2 && i % 20 < 11) hot((i / 3) % hot.length)
+      else if (i >= n / 2 && i % 20 == 0) hot(i / 20 % hot.length)
+      else s"u$i.example.com"
+    val recs = (0 until n).map(i => (i, domain(i), tags(i % tags.length)))
+    val schema = StructType(Seq(
+      StructField("rid", IntegerType, nullable = false),
+      StructField("domain", StringType, nullable = true),
+      StructField("source", StringType, nullable = false)))
+    val dir = java.nio.file.Files.createTempDirectory("graft_cache_diff").toString
+    spark.createDataFrame(
+      new java.util.ArrayList[Row](scala.jdk.CollectionConverters.SeqHasAsJava(
+        recs.map { case (i, d, t) => Row(i, d, t) }).asJava), schema)
+      .repartitionByRange(4, org.apache.spark.sql.functions.col("rid"))
+      .sortWithinPartitions("rid")
+      .write.option("parquet.enable.dictionary", "false").parquet(s"$dir/in")
+    val df = spark.read.parquet(s"$dir/in")
+
+    val rules = List(
+      Rule("domain", "^(www|maps)\\.(.+)$", "site.$1.${tag_parts[1]}"),
+      Rule("domain", "^u(\\d)", "${tag}.u$1"),
+      Rule("domain", "^(x)x*$", "big.$1.${tag}", Some("lab1")),
+      Rule("source", "^a\\.(.+)$", "src.$1"), // keyed on the tag column itself
+      Rule("source", "^input\\.access$", "${tag}"), // fires, then dropped
+      Rule("domain", "^[a-z]", "inv.${tag_parts[0]}", invert = true)) // null and ""
+    // "foo" under game.production.api fires no rule at all
+    for (cfg <- Seq(RoutingConfig(),
+        RoutingConfig(removeTagPrefix = Some("game"), capitalizeRegexBackreference = true))) {
+      val got = Router.route(df, RuleCompiler.compileFused(rules, cfg, df.schema, "source"))
+        .select("rid", "new_tag", "new_label").collect()
+        .map(r => r.getInt(0) -> (r.getString(1), Option(r.getString(2)))).toMap
+      val want = recs.flatMap { case (i, d, t) =>
+        val record = Map[String, Any]("source" -> t) ++ Option(d).map("domain" -> _)
+        Oracle.route(rules, cfg, t, record).map(i -> _)
+      }.toMap
+      assert(got.size == want.size && got == want, s"cfg=$cfg mismatch=${
+        want.keys.filter(k => got.get(k) != want.get(k)).take(5)
+          .map(k => (k, got.get(k), want.get(k))).mkString("; ").take(2000)}")
+    }
+  }
+
   test("prepending a never-matching rule changes nothing (first-match-wins)") {
     val rules = List(
       Rule("domain", "google", "g.$1.${tag_parts[1]}"),

@@ -75,6 +75,19 @@ class PlanShapeSpec extends AnyFunSuite {
       s"route stage not codegen'd:\n${route.queryExecution.executedPlan}")
   }
 
+  test("observed flagship route evaluates the cascade once, over one child") {
+    import graft.expressions.TagRewriteExpr
+    val df = spark.read.parquet(materializedInput())
+    val counts = Router.sinkCounts(
+      Router.routeObserved(df, Pipelines.flagshipPlan(df), org.apache.spark.sql.Observation()))
+    val rewrites = executedNodes(counts)
+      .flatMap(_.expressions.flatMap(_.collect { case t: TagRewriteExpr => t }))
+    assert(rewrites.length == 1,
+      s"expected one tag_rewrite evaluation:\n${counts.queryExecution.executedPlan}")
+    // every flagship rule is keyed on `source`, the tag column itself
+    assert(rewrites.head.children.length == 1, s"children: ${rewrites.head.children}")
+  }
+
   test("row-level route is shuffle-free (narrow map pipeline)") {
     val df = spark.read.parquet(materializedInput())
     val routed = Router.route(df, Pipelines.flagshipPlan(df))

@@ -318,6 +318,16 @@ class RoutingGoldenSpec extends AnyFunSuite {
     assert(out(2)._1 == "site.ExampleMail") // "MAIL" → "Mail": rest is DOWNcased
   }
 
+  test("capitalize upper-cases the first code point, not half a surrogate pair") {
+    // Ruby: "\u{10428}bc".capitalize == "\u{10400}bc" (Deseret small → capital long I)
+    val rules = Seq(Rule("domain", "^(.+)$", "x.$1"))
+    val cfg = RoutingConfig(capitalizeRegexBackreference = true)
+    val df = frame(Seq("domain"), "input", Seq(Seq("\uD801\uDC28bc")))
+    assert(routedMap(df, rules, cfg)(0)._1 == "x.\uD801\uDC00bc")
+    assert(Oracle.route(rules, cfg, "input", Map("domain" -> "\uD801\uDC28bc")) ==
+      Some(("x.\uD801\uDC00bc", None)))
+  }
+
   // --- unknown placeholder / out-of-range behaviors -----------------------
   test("unknown placeholder and out-of-range backref/tag_parts → empty string") {
     val rules = Seq(
