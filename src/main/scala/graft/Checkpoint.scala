@@ -103,10 +103,7 @@ object Checkpoint {
           val sinkObs = Observation()
           val observed = enriched.observe(sinkObs,
             graft.expressions.CountByKeyAgg(
-              org.apache.spark.sql.functions.concat_ws("/",
-                org.apache.spark.sql.functions.coalesce(
-                  org.apache.spark.sql.functions.col(Router.NewLabel),
-                  org.apache.spark.sql.functions.lit(Router.DefaultLabel)),
+              org.apache.spark.sql.functions.concat_ws("/", Router.labelNs,
                 org.apache.spark.sql.functions.col(Router.NewTag))).as("sinks"))
           Router.writeFanOut(observed, s"$outDir/data/range=$rangeId", salt = salt)
           val sinks = sinkObs.get("sinks")

@@ -2,7 +2,7 @@ package graft
 
 import graft.RuleCompiler.RoutingPlan
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 
 /** The data path: apply a compiled [[RuleCompiler.RoutingPlan]] to a frame,
   * drop unrouted rows, optionally enrich via broadcast lookup, and fan out
@@ -23,6 +23,12 @@ object Router {
     * (nil/empty label, :80-88).
     */
   val DefaultLabel = "@default"
+
+  /** A routed row's sink label namespace: its label, or [[DefaultLabel]]
+    * when no rule set one.
+    */
+  def labelNs: Column =
+    coalesce(col(NewLabel), lit(DefaultLabel))
 
   /** Full routing incl. the unchanged/unrouted drop filter
     * (out_rewrite_tag_filter.rb:96-100): drop when (no rule fired OR tag
@@ -106,7 +112,7 @@ object Router {
   def sinkCounts(routed: DataFrame): DataFrame =
     routed
       .groupBy(
-        coalesce(col(NewLabel), lit(DefaultLabel)).as("label_ns"),
+        labelNs.as("label_ns"),
         col(NewTag).as("tag"))
       .agg(count(lit(1)).as("n_rows"))
 
@@ -125,7 +131,7 @@ object Router {
       maxRecordsPerFile: Long = 5000000L,
       format: String = "parquet"): Unit = {
     val withNs = routed
-      .withColumn("new_label_ns", coalesce(col(NewLabel), lit(DefaultLabel)))
+      .withColumn("new_label_ns", labelNs)
     val salted =
       if (salt > 1) {
         // EXPLICIT partition count: a bare repartition(exprs) is an AQE

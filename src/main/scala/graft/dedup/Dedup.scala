@@ -452,17 +452,32 @@ object Dedup {
     * cluster_id`). This is the stage that turns pairwise similarity output
     * into dedup DECISIONS: `pairs → clusters → keep one per cluster`.
     *
-    * HIERARCHICAL CONTRACTION (the 100 TB path): repeat the partition-local
-    * union-find contraction on ever-smaller "glue" graphs until the
-    * survivor graph fits a bounded driver solve, then propagate labels back
-    * down the per-level mappings. Each level is two fully-parallel steps —
-    * union-find over hash-by-source edge partitions (every node → its
-    * LOCAL set minimum; hash-by-s colocates each node's out-star so whole
-    * components collapse in-task) feeding ONE `groupBy(node)` aggregate
-    * that carries both the canonical rep (min — the back-prop mapping) and
-    * the node's full rep set (collect_set, bounded by partitions-touched),
-    * from which the DEDUPLICATED glue graph projects without any join. The
-    * serial cost is two barriers per LEVEL (typically 2 levels end-to-end)
+    * ONE CONTRACTION LOOP ([[hierarchicalLabels]], the 100 TB path): the
+    * mined pairs are level 0's edge set, and every level runs the same
+    * steps until one of them exits.
+    *  1. FITS THE DRIVER: the level's edges have at most
+    *     `min(edgesPerTask, budget)` rows → collect them and solve with a
+    *     driver-local union-find. At level 0 these are the raw pairs (the
+    *     common near-dup case: no contraction, no shuffle), tested only
+    *     when `driverSolveMaxEdges > 0`.
+    *  1. FIXPOINT (levels ≥ 1): the edge set did not shrink to ≤ 70% of
+    *     the level below, or the level cap `maxIters` is hit → the
+    *     diameter-bounded min-label fixpoint ([[distributedFixpointLabels]]
+    *     — one co-partitioned join + partial+final min per round) finishes
+    *     the by-then-much-smaller survivor graph; it is kept as the
+    *     proven-correct fallback, not the primary path.
+    *  1. CONTRACT: union-find over hash-by-source edge partitions (every
+    *     node → its LOCAL set minimum; hash-by-s colocates each node's
+    *     out-star so whole components collapse in-task) feeding ONE
+    *     per-node rollup that carries both the canonical rep (min — the
+    *     back-prop mapping) and the node's full rep set (bounded by
+    *     partitions-touched). Then: the (node, rep) pairs fit `budget` →
+    *     solve them on the driver; every node saw one partition → fully
+    *     contracted, nothing above; otherwise the DEDUPLICATED glue graph,
+    *     projected from the rep sets without any join, is the next level.
+    *
+    * Labels then propagate back down the per-level mappings. The serial
+    * cost is two barriers per LEVEL (typically 2 levels end-to-end)
     * instead of one driver-scheduled round per component DIAMETER hop,
     * which is what kept the old per-round fixpoint under the 0.8 scaling
     * bar; contraction partitioning is data-sized, not core-proportional,
@@ -470,39 +485,35 @@ object Dedup {
     * work (see the in-body comment). Invariant making the final min
     * election exact: a component's global-minimum id is the local minimum
     * of every partition set that contains it, so it survives every level as
-    * its own rep — the top-level solve (or the fully-contracted fallback
-    * label) always elects the true component minimum, which is what the
-    * exact reachability oracle checks. If a pathological graph stops
-    * shrinking (next level > 70% of current) or exceeds `maxIters` levels,
-    * the diameter-bounded min-label fixpoint ([[distributedFixpointLabels]]
-    * — one co-partitioned join + partial+final min per round) finishes the
-    * by-then-much-smaller survivor graph; it is kept as the proven-correct
-    * fallback, not the primary path.
+    * its own rep — the top-level solve (or a fully-contracted component's
+    * shared rep) always elects the true component minimum, which is what
+    * the exact reachability oracle checks.
     *
     * @param docs  frame holding every document (singletons become their own
     *              cluster) — pass the same frame the pairs were mined from.
     * @param pairs (id_a, id_b) rows, any orientation, duplicates fine.
-    * @param driverSolveMaxEdges when the raw pair graph (or any level's
-    *              survivor graph) has at most this many rows, finish with a
-    *              driver-local union-find — the standard final phase of
-    *              production CC (contract until small, then solve locally),
-    *              threshold-gated exactly like a broadcast join. The
-    *              default (1M 2-column rows ≈ low hundreds of MB of
-    *              transient driver structures) is sized like a large
+    * @param driverSolveMaxEdges the driver-solve `budget`: when a level's
+    *              edges or contracted pairs have at most this many rows,
+    *              finish with a driver-local union-find — the standard
+    *              final phase of production CC (contract until small, then
+    *              solve locally), threshold-gated exactly like a broadcast
+    *              join. The default (1M 2-column rows ≈ low hundreds of MB
+    *              of transient driver structures) is sized like a large
     *              broadcast; raise it only with driver heap to spare.
-    *              Pass 0 to disable the RAW-graph shortcut (every input
-    *              runs at least one distributed contraction level); the
-    *              hierarchical path still ends in a bounded ≤1M-row solve —
-    *              contracting until the survivor graph fits the driver is
-    *              the point of the design, and that final materialization
-    *              is the same bet a broadcast join makes.
+    *              Pass 0 to skip the level-0 test (every input runs at
+    *              least one distributed contraction level); the loop then
+    *              uses the default budget and still ends in a bounded
+    *              ≤1M-row solve — contracting until the survivor graph fits
+    *              the driver is the point of the design, and that final
+    *              materialization is the same bet a broadcast join makes.
     *              Ids must be an atomic comparable type (string/numeric —
     *              not binary/struct): both phases key hash maps and elect
     *              min labels on them.
-    * @param edgesPerTask memory budget for the phase-1 contraction: raw
-    *              edge streams larger than this repartition round-robin to
+    * @param edgesPerTask memory budget for the contraction: each level's
+    *              edges hash-partition by source into
     *              ceil(edges / edgesPerTask) tasks, bounding each task's
-    *              union-find map (≈100 B/edge of boxed state). Exposed for
+    *              union-find map (≈100 B/edge of boxed state); it also caps
+    *              the edge sets step 1 hands to the driver. Exposed for
     *              executor-heap tuning and for tests.
     * @return one row per doc: (idCol, cluster_id).
     */
@@ -511,47 +522,25 @@ object Dedup {
       pairs: DataFrame,
       idCol: String = "doc_id",
       maxIters: Int = 20,
-      driverSolveMaxEdges: Long = 1000000L,
+      driverSolveMaxEdges: Long = DefaultDriverSolveEdges,
       edgesPerTask: Long = 500000L): DataFrame = {
-    val spark = docs.sparkSession
-    val parts = spark.sessionState.conf.numShufflePartitions
-    val idType = pairs.schema.head.dataType
-    // bounded final-solve budget: with the raw shortcut disabled (≤0) the
-    // hierarchical path still ends in a bounded driver solve of the
-    // contracted survivor graph — that IS the design (see scaladoc)
-    val finalBudget =
-      if (driverSolveMaxEdges > 0) driverSolveMaxEdges else 1000000L
-    // materialize the MINED pairs once, then symmetrize from the
-    // checkpoint: a union over the raw pairs plan embeds the whole mining
-    // pipeline (banding → bucket join → verify) as BOTH union children, and
-    // exchange reuse only salvages stages below the last shuffle — the
-    // verify stage would run twice
-    // pair count rides the checkpoint action as an observe metric (no
-    // extra job) — it sizes the contraction below
-    val tMine = System.nanoTime()
+    // materialize the MINED pairs once as level 0's (s, t) edge set: every
+    // consumer below reads the checkpoint, never the mining pipeline
+    // (banding → bucket join → verify). The pair count rides the
+    // checkpoint action as an observe metric (no extra job) — it sizes the
+    // contraction below
     val pObs = org.apache.spark.sql.Observation()
-    val p = pairs.select(col("id_a"), col("id_b"))
+    val p = pairs.select(col("id_a").as("s"), col("id_b").as("t"))
       .observe(pObs, coalesce(count(lit(1)), lit(0L)).as("n"))
       .localCheckpoint()
-    val nEdges = 2L * pObs.get("n").asInstanceOf[Long]
-    if (sys.env.contains("GRAFT_CC_DEBUG"))
-      println(f"CC_MINE pairs=${nEdges / 2}%d ${(System.nanoTime() - tMine) / 1e9}%.2f s")
-    val labels: DataFrame =
-      if (driverSolveMaxEdges > 0 &&
-        nEdges <= math.min(edgesPerTask, driverSolveMaxEdges)) {
-        // tiny graph: collect the raw pairs straight off the checkpoint —
-        // no contraction, no shuffle anywhere. The common near-dup case.
-        driverSolveLabels(spark, p.collect(), idType)
-      } else {
-        hierarchicalLabels(p, nEdges, idType, parts, maxIters,
-          finalBudget, edgesPerTask)
-      }
-    releaseLocalCheckpoint(p)
+    val labels = hierarchicalLabels(p, 2L * pObs.get("n").asInstanceOf[Long],
+      docs.sparkSession.sessionState.conf.numShufflePartitions, maxIters,
+      driverSolveMaxEdges, edgesPerTask)
     // singletons rejoin here: every doc absent from the edge-incident label
     // set is its own cluster. The returned frame stays backed by the final
     // labels (a LocalRelation on the driver path; 2 columns ×
     // edge-incident nodes of checkpoint blocks on the distributed path —
-    // the big edge/intermediate blocks were released above); call
+    // the big edge/intermediate blocks were released by the loop); call
     // [[releaseClusters]] when done to free checkpoint blocks immediately
     // instead of waiting for GC + ContextCleaner
     docs.select(col(idCol))
@@ -560,6 +549,9 @@ object Dedup {
       .select(col(idCol),
         coalesce(col("cluster_id"), col(idCol)).as("cluster_id"))
   }
+
+  /** Default driver-solve budget of [[nearDupClusters]], in edge rows. */
+  private val DefaultDriverSolveEdges = 1000000L
 
   /** Mutable union-find over opaque ids (HashMap parent forest, path
     * compression) — ONE implementation for the phase-1 task-local
@@ -583,12 +575,21 @@ object Dedup {
       val rb = find(b)
       if (ra != rb) { parent.put(ra, rb); () }
     }
-    /** Frozen node list — find()'s path compression mutates the map, and
-      * HashMap iteration under mutation throws.
+    /** The min-label election: one Row(node, minimum of its set in Spark
+      * order — [[sparkLt]]) per node.
       */
-    def nodes: Vector[Any] = {
+    def minLabelRows: Iterator[org.apache.spark.sql.Row] = {
       import scala.jdk.CollectionConverters._
-      parent.keySet.asScala.toVector
+      // frozen node list — find()'s path compression mutates the map, and
+      // HashMap iteration under mutation throws
+      val nodes = parent.keySet.asScala.toVector
+      val minOf = new java.util.HashMap[Any, Any]()
+      nodes.foreach { n =>
+        val r = find(n)
+        val m = minOf.get(r)
+        if (m == null || sparkLt(n, m)) minOf.put(r, n)
+      }
+      nodes.iterator.map(n => org.apache.spark.sql.Row(n, minOf.get(find(n))))
     }
   }
 
@@ -616,19 +617,10 @@ object Dedup {
     val uf = new UnionFind
     starEdges.foreach(row => uf.union(row.get(0), row.get(1)))
     import scala.jdk.CollectionConverters._
-    val nodes = uf.nodes
-    val minOf = new java.util.HashMap[Any, Any]()
-    nodes.foreach { n =>
-      val r = uf.find(n)
-      val m = minOf.get(r)
-      if (m == null || sparkLt(n, m)) minOf.put(r, n)
-    }
-    val rows: java.util.List[org.apache.spark.sql.Row] =
-      nodes.map(n =>
-        org.apache.spark.sql.Row(n, minOf.get(uf.find(n)))).asJava
-    spark.createDataFrame(rows, org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("id", idType),
-      org.apache.spark.sql.types.StructField("cluster_id", idType))))
+    spark.createDataFrame(uf.minLabelRows.toVector.asJava,
+      org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("id", idType),
+        org.apache.spark.sql.types.StructField("cluster_id", idType))))
   }
 
   /** One contraction level: union-find per edge partition, emitting one
@@ -648,15 +640,7 @@ object Dedup {
       edges.rdd.mapPartitions { it =>
         val uf = new UnionFind // instantiated per task, never serialized
         it.foreach(row => uf.union(row.get(0), row.get(1)))
-        val ns = uf.nodes
-        val minOf = new java.util.HashMap[Any, Any]()
-        ns.foreach { n =>
-          val r = uf.find(n)
-          val m = minOf.get(r)
-          if (m == null || sparkLt(n, m)) minOf.put(r, n)
-        }
-        ns.iterator.map(n =>
-          org.apache.spark.sql.Row(n, minOf.get(uf.find(n))))
+        uf.minLabelRows
       }, schema)
   }
 
@@ -711,51 +695,29 @@ object Dedup {
       }, schema)
   }
 
-  private def emptyLabels(
-      spark: org.apache.spark.sql.SparkSession,
-      idType: org.apache.spark.sql.types.DataType): DataFrame =
-    spark.createDataFrame(
-      java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id", idType),
-        org.apache.spark.sql.types.StructField("cluster_id", idType))))
-
-  /** Hierarchical contraction (see [[nearDupClusters]] scaladoc): contract
-    * level by level until the survivor graph fits `finalBudget` rows, solve
-    * it on the driver, then back-propagate labels through the per-level
-    * (node → canonical rep) mappings. Returns (id, cluster_id) for every
-    * edge-incident node, backed by one final checkpoint (every
-    * intermediate — level edges, per-partition mappings, superseded
-    * checkpoints — is released before return).
+  /** The one contraction loop of [[nearDupClusters]] (its scaladoc lists
+    * the steps and exits). `p` is level 0's edge set — the checkpointed
+    * pairs as (s, t), unsymmetrized; `nEdges` is twice its row count, the
+    * symmetrized figure every level's size tests use. Each level's edge
+    * checkpoint, `p` included, is released once consumed. Returns
+    * (id, cluster_id) for every edge-incident node: a driver-side
+    * LocalRelation when level 0 solves, otherwise one final checkpoint
+    * (every intermediate — level edges, mappings, the top labels — is
+    * released before return).
     */
   private def hierarchicalLabels(
       p: DataFrame,
-      nEdges0: Long,
-      idType: org.apache.spark.sql.types.DataType,
+      nEdges: Long,
       parts: Int,
       maxIters: Int,
-      finalBudget: Long,
+      driverSolveMaxEdges: Long,
       edgesPerTask: Long): DataFrame = {
     val spark = p.sparkSession
-    val debug = sys.env.contains("GRAFT_CC_DEBUG")
-    // Level-0 edges: UNSYMMETRIZED (union-find is orientation-blind, and
-    // doubling the rows doubles the task input for zero extra merging),
-    // HASH-PARTITIONED BY SOURCE NODE. Hash-by-s colocates each node's
-    // out-star, so the task-local union-find collapses whole components
-    // that fit a partition — measured on the 4M-doc bench graph, the glue
-    // graph shrinks from ~0.75× the edge set (round-robin level 0: almost
-    // no consolidation, instant non-shrink fallback) to near-zero, which
-    // is the whole point of contracting. Memory stays bounded by
-    // construction: the explicit partition count caps EXPECTED edges per
-    // task, and per-node degree is capped by the pair MINERS themselves
-    // (bandedPairs/cappedPairExpansion emit ≤ bands × maxBucket neighbors
-    // per node), so no hub can funnel millions of edges into one task.
-    // Callers feeding UNCAPPED pair sets with extreme hubs should raise
-    // edgesPerTask headroom accordingly (scaladoc contract); the 16M-doc
-    // OOM of round 4 came from AQE coalescing the mined frame into a few
-    // fat partitions, which the explicit repartition below rules out
-    // either way.
-    //
+    val idType = p.schema.head.dataType
+    // with the level-0 test disabled (≤ 0) the loop still ends in a
+    // bounded driver solve — that IS the design (see scaladoc)
+    val budget =
+      if (driverSolveMaxEdges > 0) driverSolveMaxEdges else DefaultDriverSolveEdges
     // Contraction partitioning is DATA-SIZED, not core-proportional: the
     // mapping/glue volume a level emits GROWS with its partition count
     // (each extra partition splits components and every split is a glue
@@ -767,156 +729,143 @@ object Dedup {
     // those tasks across more cores, which is the scalable axis.
     def dataSizedParts(n: Long): Int =
       math.max(1, math.ceil(n.toDouble / edgesPerTask).toInt)
-    // level 0 is the UNSYMMETRIZED pair set — size its partitions by the
-    // actual row count (nEdges0 is the symmetrized 2× figure used for the
-    // shrink bookkeeping); over-partitioning splits components and every
-    // split becomes a glue edge, slowing contraction
-    var edges: DataFrame = p.select(col("id_a").as("s"), col("id_b").as("t"))
-      .repartition(dataSizedParts(nEdges0 / 2), col("s"))
-    var edgesCk: DataFrame = null // checkpoint behind `edges` at levels ≥ 1
-    var nE = nEdges0
+    // collect a checkpointed edge set (releasing a projection of a
+    // checkpoint releases the checkpoint) and solve it on the driver
+    def solve(edges: DataFrame): Option[DataFrame] = {
+      val rows = edges.collect()
+      releaseLocalCheckpoint(edges)
+      Some(driverSolveLabels(spark, rows, idType))
+    }
     val mappings = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var top: DataFrame = null
-    var topKnownEmpty = false
-    var level = 0
-    while (top == null) {
-      val t0 = System.nanoTime()
-      // ONE rollup per level carries everything the level needs: the
-      // canonical rep (min over the node's per-partition reps — the
-      // back-prop mapping) AND the full rep set (bounded by
-      // partitions-touched ≤ partition count, NOT by degree), from which
-      // the glue edges project without any join. Both row counts ride the
-      // same checkpoint action as observe metrics. r5 folded the former
-      // separate mapping-checkpoint + canonicalize-checkpoint + glue-JOIN
-      // into one aggregate (one barrier and a nodes-sized shuffle join
-      // saved per level); r6 replaced that aggregate's collect_set —
-      // which ObjectHashAggregateExec turns into a SORT-BASED aggregation
-      // past 128 keys — with the sort-free hash rollup in
-      // [[aggregateMapping]].
-      val aObs = org.apache.spark.sql.Observation()
-      val agg = aggregateMapping(contractMapping(edges), dataSizedParts(nE))
-        .observe(aObs,
-          coalesce(count(lit(1)), lit(0L)).as("nodes"),
-          coalesce(sum(size(col("__reps")).cast("long")), lit(0L)).as("pairs"))
-        .localCheckpoint()
-      val nNodes = aObs.get("nodes").asInstanceOf[Long]
-      val nPairs = aObs.get("pairs").asInstanceOf[Long]
-      if (edgesCk != null) { releaseLocalCheckpoint(edgesCk); edgesCk = null }
-      if (nPairs <= finalBudget) {
-        // the full (node—rep) multi-mapping fits the driver: those rows
-        // ARE edges of the survivor graph, solve locally — the terminal
-        // phase of the design
-        top = driverSolveLabels(spark,
-          agg.select(col("node"), explode(col("__reps")).as("rep")).collect(),
-          idType)
-        releaseLocalCheckpoint(agg)
-        if (debug) println(f"CC_LEVEL $level%d SOLVE nodes=$nNodes%d " +
-          f"pairs=$nPairs%d ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      } else if (nPairs == nNodes) {
-        // every node saw exactly ONE partition → no node links two
-        // partition-local sets → the glue graph is empty BY ARITHMETIC;
-        // skip the glue action entirely. Labels come from the
-        // back-propagation fallback (each node's rep — its set minimum —
-        // which for a fully-contracted component is the global minimum).
-        mappings += agg.select(col("node"), col("rep"))
-        top = emptyLabels(spark, idType); topKnownEmpty = true
-        if (debug) println(f"CC_LEVEL $level%d nodes=$nNodes%d " +
-          f"pairs=$nPairs%d next=0(arith) ${(System.nanoTime() - t0) / 1e9}%.2f s")
+    // one level over `edges` (nE rows symmetrized; nPrev = the level
+    // below's count). Returns the top level's labels, None when every
+    // component fully contracted.
+    @scala.annotation.tailrec
+    def level(i: Int, edges: DataFrame, nE: Long, nPrev: Long): Option[DataFrame] =
+      if ((i > 0 || driverSolveMaxEdges > 0) &&
+        nE <= math.min(edgesPerTask, budget)) {
+        // the edges fit the driver: at level 0 the raw pairs straight off
+        // the checkpoint (no repartition); above it the deduplicated glue,
+        // where contracting first would buy one more level of barriers to
+        // shrink a graph the solve bound already accepts
+        solve(edges)
+      } else if (i > 0 && (i >= maxIters || nE > (nPrev * 7) / 10)) {
+        // pathological non-shrinking graph: finish the (by now much
+        // smaller) survivor graph with the diameter-bounded min-label
+        // fixpoint — proven correct on any symmetric edge set. Edges
+        // re-lay-out hash-partitioned on the join key so every round's
+        // edge⋈label join reuses the layout with NO per-round shuffle.
+        val fx = edges.repartition(parts, col("s")).localCheckpoint()
+        releaseLocalCheckpoint(edges)
+        val top = distributedFixpointLabels(fx, parts, maxIters)
+        releaseLocalCheckpoint(fx)
+        Some(top)
       } else {
-        mappings += agg.select(col("node"), col("rep")) // rides agg's ckpt
-        // next level's edges: each node glues its canonical rep to every
-        // other rep it saw — the graph shrinks to cross-partition glue
-        // only. DEDUPLICATED BEFORE SYMMETRIZING: the projection emits one
-        // (canonical, local-rep) row per NODE, but the information is per
-        // REP PAIR — on the 4M-doc bench graph the raw glue is ~4.6M rows
-        // whose distinct set is far smaller, so skipping the distinct()
-        // "to save a shuffle" feeds the next level a nearly-unshrunken
-        // graph and defeats the contraction (measured: instant non-shrink
-        // fallback). The distinct's partial+final aggregate collapses
-        // duplicates map-side; symmetrization explodes AFTER it (the
-        // fixpoint fallback requires symmetry).
-        val eObs = org.apache.spark.sql.Observation()
-        val nextCk = agg.where(size(col("__reps")) > 1)
-          .select(col("rep").as("r1"), explode(col("__reps")).as("r2"))
-          .where(col("r1") =!= col("r2"))
-          .distinct()
-          .select(explode(array(
-            struct(col("r1").as("s"), col("r2").as("t")),
-            struct(col("r2").as("s"), col("r1").as("t")))).as("e"))
-          .select(col("e.s").as("s"), col("e.t").as("t"))
-          .observe(eObs, coalesce(count(lit(1)), lit(0L)).as("n"))
+        // Edges hash-partition BY SOURCE NODE, which colocates each node's
+        // out-star, so the task-local union-find collapses whole
+        // components that fit a partition — measured on the 4M-doc bench
+        // graph, the glue graph shrinks from ~0.75× the edge set
+        // (round-robin level 0: almost no consolidation, instant
+        // non-shrink fallback) to near-zero, which is the whole point of
+        // contracting. Memory stays bounded by construction: the explicit
+        // partition count caps EXPECTED edges per task (no AQE coalescing
+        // into a few fat partitions — the 16M-doc OOM of round 4), and
+        // per-node degree is capped by the pair MINERS themselves
+        // (bandedPairs/cappedPairExpansion emit ≤ bands × maxBucket
+        // neighbors per node); callers feeding UNCAPPED pair sets with
+        // extreme hubs should raise edgesPerTask headroom accordingly. At
+        // levels ≥ 1 hub degree is bounded by the previous level's
+        // per-task node count. Level 0 is the UNSYMMETRIZED pair set
+        // (union-find is orientation-blind; doubling the rows doubles the
+        // task input for zero extra merging), so its partitions are sized
+        // by its actual row count, nE / 2 — over-partitioning splits
+        // components and every split becomes a glue edge.
+        val rows = if (i == 0) nE / 2 else nE
+        // ONE rollup per level carries everything the level needs: the
+        // canonical rep (min over the node's per-partition reps — the
+        // back-prop mapping) AND the full rep set (bounded by
+        // partitions-touched ≤ partition count, NOT by degree), from which
+        // the glue edges project without any join. Both row counts ride
+        // the same checkpoint action as observe metrics; the rollup is the
+        // sort-free hash aggregation of [[aggregateMapping]].
+        val aObs = org.apache.spark.sql.Observation()
+        val agg = aggregateMapping(
+            contractMapping(edges.repartition(dataSizedParts(rows), col("s"))),
+            dataSizedParts(nE))
+          .observe(aObs,
+            coalesce(count(lit(1)), lit(0L)).as("nodes"),
+            coalesce(sum(size(col("__reps")).cast("long")), lit(0L)).as("pairs"))
           .localCheckpoint()
-        val nNext = eObs.get("n").asInstanceOf[Long]
-        if (debug) println(f"CC_LEVEL $level%d nodes=$nNodes%d " +
-          f"pairs=$nPairs%d next=$nNext%d ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        if (nNext == 0L) {
-          // every component fully contracted: labels come entirely from
-          // the back-propagation fallback (rep itself — the global min,
-          // see the invariant in the scaladoc)
-          releaseLocalCheckpoint(nextCk)
-          top = emptyLabels(spark, idType); topKnownEmpty = true
-        } else if (nNext <= math.min(edgesPerTask, finalBudget)) {
-          // deduped glue already fits the driver: solve it directly —
-          // contracting it first would buy one more level of barriers to
-          // shrink a graph the solve bound already accepts
-          top = driverSolveLabels(spark, nextCk.collect(), idType)
-          releaseLocalCheckpoint(nextCk)
-        } else if (level + 1 >= maxIters || nNext > (nE * 7) / 10) {
-          // pathological non-shrinking graph: finish the (by now much
-          // smaller) survivor graph with the diameter-bounded min-label
-          // fixpoint — proven correct on any symmetric edge set. Edges
-          // re-lay-out hash-partitioned on the join key so every round's
-          // edge⋈label join reuses the layout with NO per-round shuffle.
-          val fx = nextCk.repartition(parts, col("s")).localCheckpoint()
-          releaseLocalCheckpoint(nextCk)
-          top = distributedFixpointLabels(fx, parts, maxIters)
-          releaseLocalCheckpoint(fx)
+        val nNodes = aObs.get("nodes").asInstanceOf[Long]
+        val nPairs = aObs.get("pairs").asInstanceOf[Long]
+        releaseLocalCheckpoint(edges)
+        if (nPairs <= budget) {
+          // the full (node—rep) multi-mapping fits the driver: those rows
+          // ARE edges of the survivor graph, solve locally
+          solve(agg.select(col("node"), explode(col("__reps")).as("rep")))
         } else {
-          // recurse, hash-partitioned by s so every node's edges colocate
-          // (maximal per-partition merging). Hub degree at levels ≥ 1 is
-          // bounded by the PREVIOUS level's per-task node count, so the
-          // worst task is one budget plus one bounded hub neighborhood —
-          // not the unbounded raw-degree exposure level 0 avoids.
-          edges = nextCk.repartition(dataSizedParts(nNext), col("s"))
-          edgesCk = nextCk
-          nE = nNext
-          level += 1
+          mappings += agg.select(col("node"), col("rep")) // rides agg's ckpt
+          if (nPairs == nNodes) {
+            // every node saw exactly ONE partition → no node links two
+            // partition-local sets → the glue graph is empty BY
+            // ARITHMETIC (a node with several reps always glues its min
+            // to another); labels come from the back-propagation
+            None
+          } else {
+            // next level's edges: each node glues its canonical rep to
+            // every other rep it saw — the graph shrinks to
+            // cross-partition glue only. DEDUPLICATED BEFORE SYMMETRIZING:
+            // the projection emits one (canonical, local-rep) row per
+            // NODE, but the information is per REP PAIR — on the 4M-doc
+            // bench graph the raw glue is ~4.6M rows whose distinct set is
+            // far smaller, so skipping the distinct() "to save a shuffle"
+            // feeds the next level a nearly-unshrunken graph and defeats
+            // the contraction (measured: instant non-shrink fallback). The
+            // distinct's partial+final aggregate collapses duplicates
+            // map-side; symmetrization explodes AFTER it (the fixpoint
+            // fallback requires symmetry).
+            val eObs = org.apache.spark.sql.Observation()
+            val glue = agg.where(size(col("__reps")) > 1)
+              .select(col("rep").as("r1"), explode(col("__reps")).as("r2"))
+              .where(col("r1") =!= col("r2"))
+              .distinct()
+              .select(explode(array(
+                struct(col("r1").as("s"), col("r2").as("t")),
+                struct(col("r2").as("s"), col("r1").as("t")))).as("e"))
+              .select(col("e.s").as("s"), col("e.t").as("t"))
+              .observe(eObs, coalesce(count(lit(1)), lit(0L)).as("n"))
+              .localCheckpoint()
+            level(i + 1, glue, eObs.get("n").asInstanceOf[Long], nE)
+          }
         }
       }
-    }
+    val top = level(0, p, nEdges, 0L)
     // back-propagate: a level-i node's label is its canonical rep's label
     // one level up, falling back to the rep itself — a rep with no label
     // above is a component that fully contracted, and a fully-contracted
     // component's shared rep IS its global minimum (scaladoc invariant).
-    // The top frame is KNOWN-empty on the fully-contracted exits (the
-    // common case): the first reverse step then joins the biggest mapping
-    // against an empty frame just to coalesce nulls to rep — skip the
-    // join and project rep directly (measured: one full shuffle join of
-    // the level-0 mapping saved at 64M docs).
-    var labels = top
-    var labelsKnownEmpty = topKnownEmpty
-    mappings.reverseIterator.foreach { m =>
-      labels =
-        if (labelsKnownEmpty)
-          m.select(col("node").as("id"), col("rep").as("cluster_id"))
-        else m
-          .join(labels.select(col("id").as("__rid"), col("cluster_id")),
+    // With nothing above (the fully-contracted exit, the common case) the
+    // step projects rep directly instead of joining the biggest mapping
+    // against an empty frame (measured: one full shuffle join of the
+    // level-0 mapping saved at 64M docs).
+    val labels = mappings.foldRight(top) { (m, above) =>
+      Some(above match {
+        case None => m.select(col("node").as("id"), col("rep").as("cluster_id"))
+        case Some(l) => m
+          .join(l.select(col("id").as("__rid"), col("cluster_id")),
             col("rep") === col("__rid"), "left")
           .select(col("node").as("id"),
             coalesce(col("cluster_id"), col("rep")).as("cluster_id"))
-      labelsKnownEmpty = false
-    }
-    if (mappings.isEmpty) top
+      })
+    }.get // defined: the only exit without labels adds a mapping first
+    if (mappings.isEmpty) labels
     else {
       // one checkpoint materializes the whole back-prop chain, then every
       // intermediate (mappings, top-level labels) is released — the caller
       // holds 2 columns × edge-incident nodes, nothing else
-      val tBp = System.nanoTime()
       val out = labels.localCheckpoint()
-      if (debug) println(
-        f"CC_BACKPROP levels=${mappings.size}%d ${(System.nanoTime() - tBp) / 1e9}%.2f s")
       mappings.foreach(releaseLocalCheckpoint)
-      releaseLocalCheckpoint(top)
+      top.foreach(releaseLocalCheckpoint)
       out
     }
   }
@@ -936,7 +885,6 @@ object Dedup {
     var iter = 0
     var converged = false
     while (!converged && iter < maxIters) {
-      val tRound = System.nanoTime()
       // aggregated messages: each node's label crosses its edges once and a
       // partial+final min folds map-side — no node's full neighborhood ever
       // concentrates in one task. The edge⋈label join is co-partitioned
@@ -962,8 +910,6 @@ object Dedup {
       releaseLocalCheckpoint(labels) // superseded round: free its blocks NOW
       labels = next
       iter += 1
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        println(f"CC_ROUND $iter ${(System.nanoTime() - tRound) / 1e9}%.2f s converged=$converged")
     }
     // loud failure, not a warning: returning upper-bound labels would
     // surface as an inexplicable value mismatch against the exact-fixpoint

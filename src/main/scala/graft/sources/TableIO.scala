@@ -123,8 +123,7 @@ final class IcebergIO(catalog: String) extends TableIO {
       routed: DataFrame, sink: String, maxRecordsPerFile: Long): Unit = {
     import org.apache.spark.sql.functions._
     val df = routed
-      .withColumn("new_label_ns",
-        coalesce(col(graft.Router.NewLabel), lit(graft.Router.DefaultLabel)))
+      .withColumn("new_label_ns", graft.Router.labelNs)
       .drop(graft.Router.NewLabel)
     val w = df.writeTo(s"$catalog.$sink")
     if (routed.sparkSession.catalog.tableExists(s"$catalog.$sink")) w.append()

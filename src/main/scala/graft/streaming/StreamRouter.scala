@@ -1,7 +1,6 @@
 package graft.streaming
 
-import graft.{Router, Rule, RoutingConfig, RuleCompiler}
-import graft.RuleCompiler.RoutingPlan
+import graft.Router
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupStateTimeout, OutputMode, Trigger}
@@ -18,37 +17,20 @@ import org.apache.spark.sql.Row
   * but a user of the reference switching to this library keeps a streaming
   * path:
   *
-  *  - `route` — readStream → parse/route → rows with (new_tag, new_label),
-  *    append mode, no state, no watermark (time is pass-through in the
-  *    reference too);
-  *  - `sinkCountsQuery` — running per-sink counts (complete/update mode
-  *    stateful aggregation), the streaming analog of the per-sink count
-  *    aggregate;
-  *  - `writeFanOut` — append-mode file sink partitioned by
+  *  - `Router.route` applies unchanged to a readStream frame → rows with
+  *    (new_tag, new_label), append mode, no state, no watermark (time is
+  *    pass-through in the reference too);
+  *  - `Router.sinkCounts` over a routed stream is the running per-sink
+  *    count (complete/update mode stateful aggregation);
+  *  - `Dedup.incrementalExact` over a stream is a stream-static left join,
+  *    which Structured Streaming executes STATELESSLY, so unlike
+  *    [[dedupExact]] it needs no watermark and recognizes stream-vs-corpus
+  *    duplicates of ANY age — the corpus is the memory;
+  *  - `writeFanOut` (here) — append-mode file sink partitioned by
   *    (label-namespace, tag): one directory per sink, exactly-once via the
   *    streaming checkpoint — the streaming analog of the batch fan-out.
   */
 object StreamRouter {
-
-  /** Apply a compiled plan to a STREAMING DataFrame. Identical semantics to
-    * the batch `Router.route` (same plan object, same expression).
-    */
-  def route(stream: DataFrame, plan: RoutingPlan): DataFrame =
-    Router.route(stream, plan)
-
-  /** Compile + route (fused cascade, like the batch convenience). */
-  def route(
-      stream: DataFrame,
-      rules: Seq[Rule],
-      cfg: RoutingConfig = RoutingConfig(),
-      tagCol: String = "source"): DataFrame =
-    route(stream, RuleCompiler.compileFused(rules, cfg, stream.schema, tagCol))
-
-  /** Running per-sink counts over a routed stream (update-mode compatible
-    * aggregation): one row per (label-namespace, tag), monotone counts.
-    */
-  def sinkCounts(routed: DataFrame): DataFrame =
-    Router.sinkCounts(routed)
 
   /** Streaming exact dedup: keep the first arrival of each content
     * fingerprint, with STATE BOUNDED BY THE WATERMARK — the streaming analog
@@ -93,28 +75,6 @@ object StreamRouter {
       .withWatermark(tsCol, delay)
       .dropDuplicatesWithinWatermark("__fp")
       .drop("__fp")
-
-  /** Streaming INCREMENTAL dedup vs a SEALED corpus — the streaming face of
-    * [[graft.dedup.Dedup.incrementalExact]], and a literal delegation to it:
-    * the plan is a stream-static left join, which Structured Streaming
-    * executes STATELESSLY (the static corpus side is planned per
-    * micro-batch; no join state accrues on the stream side), so unlike
-    * [[dedupExact]] this needs no watermark and recognizes duplicates of
-    * ANY age — the corpus is the memory. The static side reduces to one
-    * fingerprint→keeper row per distinct text before the join, exactly as
-    * in batch; at real scale that reduced fingerprint table is the bucketed
-    * artifact, re-read cheaply each micro-batch. Complementary split:
-    * [[dedupExact]] catches intra-stream duplicates within the watermark,
-    * this face catches stream-vs-corpus duplicates across all time.
-    *
-    * @return stream + (corpus_keeper, in_corpus), same contract as batch.
-    */
-  def incrementalDedup(
-      stream: DataFrame,
-      corpus: DataFrame,
-      idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame =
-    graft.dedup.Dedup.incrementalExact(stream, corpus, idCol, textCol)
 
   /** Streaming INCREMENTAL NEAR-DUP vs a sealed corpus — the streaming
     * face of [[graft.dedup.CorpusArtifacts.incrementalNearDupPrepared]]:
@@ -439,8 +399,7 @@ object StreamRouter {
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): DataStreamWriter[Row] =
     routed
-      .withColumn("new_label_ns",
-        coalesce(col(Router.NewLabel), lit(Router.DefaultLabel)))
+      .withColumn("new_label_ns", Router.labelNs)
       .drop(Router.NewLabel)
       .writeStream
       .format("parquet")

@@ -30,7 +30,7 @@ class StreamRouterSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(String, String)]
     val stream = mem.toDF.toDF("doc_id", "source")
-    val routed = StreamRouter.route(stream, rules)
+    val routed = Router.route(stream, rules)
     mem.addData(rows: _*) // before start: AvailableNow snapshots offsets
     val q = routed.writeStream.format("memory").queryName("routed_stream")
       .outputMode("append").trigger(Trigger.AvailableNow()).start()
@@ -92,9 +92,9 @@ class StreamRouterSpec extends AnyFunSuite {
   test("streaming per-sink counts converge to the batch aggregate") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(String, String)]
-    val routed = StreamRouter.route(mem.toDF.toDF("doc_id", "source"), rules)
+    val routed = Router.route(mem.toDF.toDF("doc_id", "source"), rules)
     mem.addData(rows: _*)
-    val q = StreamRouter.sinkCounts(routed)
+    val q = Router.sinkCounts(routed)
       .writeStream.format("memory").queryName("sink_counts_stream")
       .outputMode("complete").trigger(Trigger.AvailableNow()).start()
     q.processAllAvailable(); q.stop()
@@ -111,7 +111,7 @@ class StreamRouterSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val dir = java.nio.file.Files.createTempDirectory("graft_stream").toString
     val mem = MemoryStream[(String, String)]
-    val routed = StreamRouter.route(mem.toDF.toDF("doc_id", "source"), rules)
+    val routed = Router.route(mem.toDF.toDF("doc_id", "source"), rules)
     mem.addData(rows: _*)
     val q = StreamRouter
       .writeFanOut(routed, s"$dir/data", s"$dir/ckpt", Trigger.AvailableNow())
@@ -164,7 +164,7 @@ class StreamRouterSpec extends AnyFunSuite {
     val fresh = Seq(("n1", "alpha"), ("n2", "gamma"), ("n3", "beta"))
     val mem = MemoryStream[(String, String)]
     val stream = mem.toDF.toDF("doc_id", "text")
-    val out = StreamRouter.incrementalDedup(stream, corpus)
+    val out = graft.dedup.Dedup.incrementalExact(stream, corpus)
     mem.addData(fresh: _*)
     val q = out.writeStream.format("memory").queryName("incdedup_stream")
       .outputMode("append").trigger(Trigger.AvailableNow()).start()

@@ -366,17 +366,17 @@ class DedupSpec extends AnyFunSuite {
       .toDF("id_a", "id_b")
     val want = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
       10L -> 10L, 11L -> 10L, 12L -> 10L, 20L -> 20L, 21L -> 21L)
-    // default path: the contracted graph is tiny → driver-local union-find
+    // default budget: the raw pairs fit the driver at level 0 → solved
+    // there, no contraction
     val got = Dedup.nearDupClusters(nodes, pairs).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == want)
-    // the DISTRIBUTED fixpoint must produce the identical labels
-    // (threshold 0 forces it past the driver-solve gate)
+    // threshold 0 skips the level-0 test: one distributed contraction
+    // level, whose (node, rep) pairs fit the default budget → driver solve
     val gotDist = Dedup.nearDupClusters(nodes, pairs, driverSolveMaxEdges = 0L)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(gotDist == want)
-    // a long chain exercises the multi-round fixpoint (diameter 9), again
-    // on both paths
+    // a chain (diameter 9) on the same two paths
     val chainNodes = (0L until 10L).toDF("doc_id")
     val chainPairs = (0L until 9L).map(i => (i + 1, i)).toDF("id_a", "id_b")
     for (threshold <- Seq(Long.MaxValue, 0L)) {
@@ -384,16 +384,23 @@ class DedupSpec extends AnyFunSuite {
         driverSolveMaxEdges = threshold).collect()
       assert(chain.forall(_.getLong(1) == 0L), s"threshold=$threshold")
     }
-    // middle gate branch: edges exceed the per-task contraction budget
-    // (round-robin repartition + star checkpoint + observed size), but the
-    // measured star still fits the driver threshold → driver solve
-    val mid = Dedup.nearDupClusters(chainNodes, chainPairs,
-      driverSolveMaxEdges = 100L, edgesPerTask = 4L).collect()
-    assert(mid.forall(_.getLong(1) == 0L))
-    // and the same budget with a sub-star threshold → distributed fixpoint
-    val midDist = Dedup.nearDupClusters(chainNodes, chainPairs,
-      driverSolveMaxEdges = 2L, edgesPerTask = 4L).collect()
-    assert(midDist.forall(_.getLong(1) == 0L))
+    // budgets that steer the chain through the contraction loop's other
+    // exits:
+    //  (100, 4): edges exceed the per-task budget, so level 0 contracts
+    //            (hash-partitioned by source); its (node, rep) pairs fit
+    //            the threshold → driver solve
+    //  (2, 4):   level 0 glues into a second level, which ends fully
+    //            contracted (labels = the reps)
+    //  (2, 3):   two contraction levels, then level 2's glue fits
+    //            min(edgesPerTask, threshold) → driver solve
+    //  (2, 2):   level 0's glue stays above 70% of its edges → level 1
+    //            hands it to the distributed min-label fixpoint
+    for ((threshold, perTask) <- Seq((100L, 4L), (2L, 4L), (2L, 3L), (2L, 2L))) {
+      val labels = Dedup.nearDupClusters(chainNodes, chainPairs,
+        driverSolveMaxEdges = threshold, edgesPerTask = perTask).collect()
+      assert(labels.length == 10 && labels.forall(_.getLong(1) == 0L),
+        s"threshold=$threshold edgesPerTask=$perTask")
+    }
   }
 
   test("connected components: multi-level hierarchical contraction matches local union-find") {
@@ -416,8 +423,8 @@ class DedupSpec extends AnyFunSuite {
     val want = (0 until n).map(i => i.toLong -> find(i).toLong).toMap
     val nodes = (0L until n.toLong).toDF("doc_id")
     val pairsDf = pairSeq.toDF("id_a", "id_b")
-    // tiny budgets force: raw shortcut skipped, per-level survivor graphs
-    // above the collect bar for at least one level, bounded tasks
+    // tiny budgets force: no level-0 driver solve, per-level survivor
+    // graphs above the collect bar for at least one level, bounded tasks
     val got = Dedup.nearDupClusters(nodes, pairsDf,
       driverSolveMaxEdges = 60L, edgesPerTask = 50L)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -430,6 +437,18 @@ class DedupSpec extends AnyFunSuite {
       driverSolveMaxEdges = 60L, edgesPerTask = 50L)
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(sGot == want.map { case (k, v) => f"d$k%04d" -> f"d$v%04d" })
+  }
+
+  test("connected components: the fixpoint fails loudly past maxIters rounds") {
+    import spark.implicits._
+    // 1-row budgets send a 30-node chain to the fixpoint, whose diameter
+    // (29) exceeds maxIters = 20
+    val nodes = (0L until 30L).toDF("doc_id")
+    val pairs = (0L until 29L).map(i => (i + 1, i)).toDF("id_a", "id_b")
+    val err = intercept[IllegalStateException] {
+      Dedup.nearDupClusters(nodes, pairs, driverSolveMaxEdges = 1L, edgesPerTask = 1L)
+    }
+    assert(err.getMessage.contains("did not converge within maxIters=20"))
   }
 
   test("exact dedup: input frames already carrying __fp/__kfp/__norm are not clobbered") {
