@@ -1,12 +1,8 @@
 package graft
 
 import java.io.File
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
-import com.fasterxml.jackson.core.json.JsonReadFeature
-import com.fasterxml.jackson.databind.JsonNode
-import com.fasterxml.jackson.databind.json.JsonMapper
 import graft.RuleCompiler.RoutingPlan
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import scala.jdk.CollectionConverters._
@@ -15,14 +11,20 @@ import scala.jdk.CollectionConverters._
   * checkpoint requirement: each completed range persists a manifest carrying
   * (input fingerprint, file range, rule-version hash) plus
   * emitted/matched/unmatched counters and per-sink counts. A re-run skips
-  * ranges whose manifest exists with a matching rule hash — so a killed job
-  * resumes idempotently, and a rule change automatically invalidates all
-  * prior work.
+  * ranges whose manifest exists with a matching rule hash and input
+  * fingerprint — so a killed job resumes idempotently, and a rule change or
+  * rewritten input automatically invalidates prior work.
   *
   * The input is partitioned by contiguous file groups (the parquet analog of
   * Iceberg snapshot + file-scan ranges; under Iceberg the manifest would
-  * carry the snapshot-id — here a file fingerprint of (path, size) stands
-  * in). Manifests are written atomically (tmp + rename).
+  * carry the snapshot-id). Each range's fingerprint is
+  * [[Lineage.fingerprint]] over its files — (name, size, mtime), the same
+  * function behind `ParquetIO.versionId` — so a range rewritten in place
+  * with the same file names and sizes re-runs. Manifests written before
+  * mtime was part of the range fingerprint no longer match: the first run
+  * after that upgrade re-runs every range once. Manifests are read and
+  * written through [[Lineage]]'s codec (atomic write, unique temp file);
+  * the earlier hand-written layout still reads.
   */
 object Checkpoint {
 
@@ -40,14 +42,6 @@ object Checkpoint {
     def totalSinkCounts: Map[String, Long] =
       ranges.flatMap(_.sinkCounts.toSeq)
         .groupMapReduce(_._1)(_._2)(_ + _)
-  }
-
-  /** Deterministic fingerprint of a file group: FNV over (name, size). */
-  def filesFingerprint(files: Seq[File]): String = {
-    val canonical = files.sortBy(_.getName)
-      .map(f => s"${f.getName}:${f.length}").mkString("|")
-    java.lang.Long.toHexString(
-      graft.expressions.FnvHash64.hash(canonical.getBytes(StandardCharsets.UTF_8)))
   }
 
   /** Run the routing pipeline over `inputDir` parquet, fanning out to
@@ -80,8 +74,8 @@ object Checkpoint {
     var budget = maxRangesThisRun
     val results = groups.map { case (files, rangeId) =>
       val mf = manifestDir.resolve(s"range_$rangeId.json")
-      val fp = filesFingerprint(files.toSeq)
-      readManifest(mf) match {
+      val fp = Lineage.fingerprint(Paths.get(inputDir), files.map(_.toPath).toSeq)
+      Lineage.readManifest(mf) match {
         case Some(m) if m.path("rule_version_hash").asText == plan.ruleVersionHash &&
           m.path("input_fingerprint").asText == fp =>
           RangeResult(rangeId, skipped = true,
@@ -119,32 +113,18 @@ object Checkpoint {
     RunSummary(results)
   }
 
-  // --- manifest JSON -------------------------------------------------------
-
-  /** Manifest reader/writer. Raw control characters are accepted on read:
-    * older manifests escaped only `"` and `\\` inside sink tags.
-    */
-  private val json = JsonMapper.builder()
-    .enable(JsonReadFeature.ALLOW_UNESCAPED_CONTROL_CHARS).build()
-
   private def writeManifest(
       path: java.nio.file.Path,
       plan: RoutingPlan,
       inputFp: String,
       r: RangeResult): Unit = {
-    val doc = json.createObjectNode()
+    val doc = Lineage.newManifest()
       .put("range_id", r.rangeId)
       .put("input_fingerprint", inputFp)
       .put("rule_version_hash", plan.ruleVersionHash)
       .put("emitted", r.emitted).put("matched", r.matched).put("unmatched", r.unmatched)
     val sinks = doc.putObject("sink_counts")
     r.sinkCounts.toSeq.sortBy(_._1).foreach { case (k, v) => sinks.put(k, v) }
-    val tmp = path.resolveSibling(path.getFileName.toString + ".tmp")
-    Files.write(tmp, json.writeValueAsBytes(doc))
-    Files.move(tmp, path, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    Lineage.writeManifest(path, doc)
   }
-
-  private def readManifest(path: java.nio.file.Path): Option[JsonNode] =
-    if (Files.exists(path)) Some(json.readTree(path.toFile)) else None
 }

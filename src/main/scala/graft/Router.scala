@@ -30,6 +30,14 @@ object Router {
   def labelNs: Column =
     coalesce(col(NewLabel), lit(DefaultLabel))
 
+  /** The fan-out sink layout, shared by every fan-out writer (this object's
+    * files, the streaming file sink, Iceberg): [[labelNs]] materialized as
+    * [[LabelNsCol]] in place of [[NewLabel]], one partition per
+    * (label namespace, tag).
+    */
+  val LabelNsCol = "new_label_ns"
+  val SinkPartitionCols: Seq[String] = Seq(LabelNsCol, NewTag)
+
   /** Full routing incl. the unchanged/unrouted drop filter
     * (out_rewrite_tag_filter.rb:96-100): drop when (no rule fired OR tag
     * unchanged) AND no label; a label keeps an unchanged tag alive
@@ -130,8 +138,7 @@ object Router {
       saltKey: String = "doc_id",
       maxRecordsPerFile: Long = 5000000L,
       format: String = "parquet"): Unit = {
-    val withNs = routed
-      .withColumn("new_label_ns", labelNs)
+    val withNs = routed.withColumn(LabelNsCol, labelNs)
     val salted =
       if (salt > 1) {
         // EXPLICIT partition count: a bare repartition(exprs) is an AQE
@@ -141,15 +148,14 @@ object Router {
         // test). A user-specified count is exempt from coalescing.
         val parts = routed.sparkSession.sessionState.conf.numShufflePartitions
         withNs.repartition(parts,
-          col("new_label_ns"), col(NewTag),
-          pmod(xxhash64(col(saltKey)), lit(salt)))
+          SinkPartitionCols.map(col) :+ pmod(xxhash64(col(saltKey)), lit(salt)): _*)
       } else withNs
     salted
       .drop(NewLabel)
       .write
       .mode("overwrite")
       .option("maxRecordsPerFile", maxRecordsPerFile)
-      .partitionBy("new_label_ns", NewTag)
+      .partitionBy(SinkPartitionCols: _*)
       .format(format)
       .save(outDir)
   }

@@ -1,5 +1,6 @@
 package graft.dedup
 
+import graft.Lineage
 import graft.sources.BucketedIO
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -174,15 +175,18 @@ object CorpusArtifacts {
     * `key`, reading the persisted copy when its manifest matches
     * (corpusFingerprint, minerKey) and mining + persisting it otherwise —
     * the [[graft.Checkpoint]] discipline applied to the most expensive
-    * derived table in the pipeline. Consumers that only need cluster KEYS
-    * (the leakage-free split; governance rollups) read the artifact at
+    * derived table in the pipeline, through the same [[graft.Lineage]]
+    * manifest codec. Consumers that only need cluster KEYS (the
+    * leakage-free split; governance rollups) read the artifact at
     * projection cost instead of re-mining pairs + components per query.
     *
-    * Invalidation: the manifest stores the corpus content fingerprint
-    * (recompute on data change) and the caller's `minerKey`, which MUST
-    * encode the mining parameters and a version stamp for the miner's
-    * semantics (bump it when the mining code changes — the artifact cannot
-    * see code).
+    * Invalidation: the manifest `{corpus_fingerprint, miner_key}` stores the
+    * corpus content fingerprint (recompute on data change; a directory
+    * corpus's `versionId` is [[graft.Lineage.fingerprint]]) and the caller's
+    * `minerKey`, which MUST encode the mining parameters and a version stamp
+    * for the miner's semantics (bump it when the mining code changes — the
+    * artifact cannot see code). A hit compares the parsed fields, so
+    * manifests written by the earlier string template still hit.
     */
   def clustersCached(
       spark: SparkSession,
@@ -193,13 +197,12 @@ object CorpusArtifacts {
     val keyHash = java.lang.Long.toHexString(graft.expressions.FnvHash64.hash(
       s"$corpusFingerprint:$minerKey".getBytes(java.nio.charset.StandardCharsets.UTF_8)))
     val dir = java.nio.file.Paths.get(baseDir, s"clusters_$keyHash")
-    val manifest = dir.resolve("_graft_manifest.json")
-    val expected =
-      s"""{"corpus_fingerprint":"$corpusFingerprint","miner_key":"$minerKey"}"""
-    val hit = java.nio.file.Files.exists(manifest) &&
-      java.nio.file.Files.exists(dir.resolve("_SUCCESS")) &&
-      new String(java.nio.file.Files.readAllBytes(manifest),
-        java.nio.charset.StandardCharsets.UTF_8) == expected
+    val manifest = "_graft_manifest.json"
+    val hit = java.nio.file.Files.exists(dir.resolve("_SUCCESS")) &&
+      Lineage.readManifest(dir.resolve(manifest)).exists { m =>
+        m.path("corpus_fingerprint").textValue == corpusFingerprint &&
+          m.path("miner_key").textValue == minerKey
+      }
     if (!hit) {
       val mined = mine()
       // ATOMIC PUBLICATION (r5 ADVICE): write data + manifest into a
@@ -211,8 +214,8 @@ object CorpusArtifacts {
         dir.getFileName.toString + ".tmp-" + java.util.UUID.randomUUID())
       mined.write.mode("overwrite").parquet(tmp.toString)
       Dedup.releaseClusters(mined)
-      java.nio.file.Files.write(tmp.resolve("_graft_manifest.json"),
-        expected.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      Lineage.writeManifest(tmp.resolve(manifest), Lineage.newManifest()
+        .put("corpus_fingerprint", corpusFingerprint).put("miner_key", minerKey))
       def deleteRecursively(p: java.nio.file.Path): Unit = {
         val s = java.nio.file.Files.walk(p)
         try s.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())

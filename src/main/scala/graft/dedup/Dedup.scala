@@ -159,12 +159,6 @@ object Dedup {
         transform(sequence(lit(0), lit(numHashes - 1)), j => xxhash64(h, j)),
         (a, b) => least(a, b)))
 
-  /** Convenience: signature straight from text. */
-  def minHashSignature(text: Column, numHashes: Int, shingleSize: Int): Column =
-    minHashFromHashes(
-      transform(TextFunctions.shingles(text, shingleSize), s => xxhash64(s)),
-      numHashes)
-
   /** Candidate pairs from a banded (id, band_key) frame: bucket = docs
     * sharing a band key; pairs expand inside the bucket row (no self-join).
     * The gather is [[graft.expressions.CappedCollectList]] with
@@ -929,7 +923,7 @@ object Dedup {
     * (Dataset.unpersist does not reach them — the RDD was persisted by the
     * checkpoint machinery, not by cache()).
     */
-  private def releaseLocalCheckpoint(df: DataFrame): Unit =
+  private[graft] def releaseLocalCheckpoint(df: DataFrame): Unit =
     df.queryExecution.analyzed.foreach {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
         lr.rdd.unpersist(blocking = false)

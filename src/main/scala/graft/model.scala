@@ -75,26 +75,3 @@ object RoutingConfig {
   * (out_rewrite_tag_filter.rb:44,54,58,62,66).
   */
 final class RuleConfigError(msg: String) extends RuntimeException(msg)
-
-/** Canonical input row of the flagship pipeline (BASELINE.json input_hint):
-  * a pre-tokenized training sequence with a dot-separated routing tag in
-  * `source`. `tokens` is a pass-through payload whose byte-identity on every
-  * routed row is a correctness invariant.
-  */
-final case class SequenceRow(
-    doc_id: String,
-    tokens: Array[Int],
-    n_tok: Int,
-    source: String)
-
-/** Routed output row: input columns plus the routing decision. `new_label`
-  * null means the default namespace (reference default router,
-  * out_rewrite_tag_filter.rb:80-88).
-  */
-final case class RoutedRow(
-    doc_id: String,
-    tokens: Array[Int],
-    n_tok: Int,
-    source: String,
-    new_tag: String,
-    new_label: Option[String])

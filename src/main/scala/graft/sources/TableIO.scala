@@ -6,21 +6,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * "Iceberg table of pre-tokenized training sequences", one Iceberg sink per
   * rewritten tag, snapshot-id lineage), but this sandbox ships no
   * iceberg-spark-runtime jar (/opt/spark/jars has none and the offline
-  * coursier cache cannot resolve one — SURVEY.md §7.6). The engine therefore
-  * talks to a `TableIO` trait: [[ParquetIO]] is fully exercised here and in
-  * CI; [[IcebergIO]] compiles against the same Spark surface (format
-  * strings + SQL) and carries the snapshot-id lineage the Checkpoint
-  * manifests record, to be exercised where the runtime jar exists.
+  * coursier cache cannot resolve one — SURVEY.md §7.6). A `TableIO` reads a
+  * table and names its current version: [[ParquetIO]] is fully exercised
+  * here and in CI; [[IcebergIO]] compiles against the same Spark surface
+  * (format strings + SQL) and carries the snapshot-id lineage, to be
+  * exercised where the runtime jar exists. Fan-out writes go through
+  * [[graft.Router.writeFanOut]] (files) or [[IcebergIO.writeFanOut]], both
+  * on the sink layout [[graft.Router.SinkPartitionCols]].
   */
 trait TableIO {
 
   /** Read a table (path for parquet; catalog identifier for Iceberg). */
   def read(spark: SparkSession, table: String): DataFrame
-
-  /** Fan-out write: one partition directory / Iceberg partition per
-    * (label-namespace, tag) under `sink`.
-    */
-  def writeFanOut(routed: DataFrame, sink: String, maxRecordsPerFile: Long): Unit
 
   /** Lineage id of the table's current version: Iceberg snapshot-id, or a
     * content fingerprint under parquet (Checkpoint manifests store it as
@@ -35,48 +32,33 @@ object ParquetIO extends TableIO {
   override def read(spark: SparkSession, table: String): DataFrame =
     spark.read.parquet(table)
 
-  override def writeFanOut(
-      routed: DataFrame, sink: String, maxRecordsPerFile: Long): Unit =
-    graft.Router.writeFanOut(routed, sink, maxRecordsPerFile = maxRecordsPerFile)
-
-  /** Content fingerprint over (relative path, size) of every parquet file,
-    * RECURSIVELY — partitioned layouts (incl. this object's own fan-out
-    * output, `new_label_ns=<l>/new_tag=<t>/part-*.parquet`) keep their data
-    * files below subdirectories, so a top-level-only listing would
-    * fingerprint every partitioned table to the same empty-list hash.
+  /** Content fingerprint ([[graft.Lineage.fingerprint]]: relative path,
+    * size, mtime) of every parquet file, RECURSIVELY — partitioned layouts
+    * (incl. the fan-out output, `new_label_ns=<l>/new_tag=<t>/part-*.parquet`)
+    * keep their data files below subdirectories, so a top-level-only listing
+    * would fingerprint every partitioned table to the same empty-list hash.
     */
   override def versionId(spark: SparkSession, table: String): String =
-    FileTreeFingerprint(table, ".parquet")
+    TableIO.treeFingerprint(table, ".parquet")
 }
 
-/** Shared recursive (relative path, size) fingerprint for directory-backed
-  * sources (parquet, JSON-lines).
-  */
-private[sources] object FileTreeFingerprint {
-  def apply(table: String, suffix: String): String = {
+object TableIO {
+
+  /** [[graft.Lineage.fingerprint]] of the data files (by suffix, hidden
+    * files excluded) anywhere under the directory `table`.
+    */
+  private[sources] def treeFingerprint(table: String, suffix: String): String = {
     val root = java.nio.file.Paths.get(table)
-    val files = {
-      val s = java.nio.file.Files.walk(root)
+    val s = java.nio.file.Files.walk(root)
+    val files =
       try {
         import scala.jdk.CollectionConverters._
-        s.iterator().asScala
-          .filter(p => p.getFileName.toString.endsWith(suffix) &&
-            !p.getFileName.toString.startsWith("."))
-          .map { p =>
-            val f = p.toFile
-            // mtime folded in (r5 ADVICE): a corpus rewritten in place with
-            // identical names/sizes must not fingerprint identically —
-            // artifact caches keyed on this id would silently serve stale
-            // derived tables
-            root.relativize(p).toString -> (f.length(), f.lastModified())
-          }
-          .toVector.sorted
+        s.iterator().asScala.filter { p =>
+          val name = p.getFileName.toString
+          name.endsWith(suffix) && !name.startsWith(".")
+        }.toVector
       } finally s.close()
-    }
-    val canonical =
-      files.map { case (p, (len, mt)) => s"$p:$len:$mt" }.mkString("|")
-    java.lang.Long.toHexString(graft.expressions.FnvHash64.hash(
-      canonical.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+    graft.Lineage.fingerprint(root, files)
   }
 }
 
@@ -93,13 +75,8 @@ final class JsonLinesIO(schema: org.apache.spark.sql.types.StructType)
   override def read(spark: SparkSession, table: String): DataFrame =
     spark.read.schema(schema).json(table)
 
-  override def writeFanOut(
-      routed: DataFrame, sink: String, maxRecordsPerFile: Long): Unit =
-    graft.Router.writeFanOut(routed, sink, maxRecordsPerFile = maxRecordsPerFile,
-      format = "json")
-
   override def versionId(spark: SparkSession, table: String): String =
-    FileTreeFingerprint(table, ".json")
+    TableIO.treeFingerprint(table, ".json")
 }
 
 /** Iceberg catalog tables — same Spark API surface, requires
@@ -112,22 +89,22 @@ final class IcebergIO(catalog: String) extends TableIO {
   override def read(spark: SparkSession, table: String): DataFrame =
     spark.read.format("iceberg").load(s"$catalog.$table")
 
-  /** Append-or-create: a resumable runner calls this once per input range,
-    * so an unconditional createOrReplace would wipe earlier ranges. File
-    * sizes are governed by Iceberg's own `write.target-file-size-bytes`
-    * table property (records-per-file is not an Iceberg write option); the
-    * `maxRecordsPerFile` parameter bounds rows per TASK via the caller's
-    * salted repartition instead.
+  /** Fan-out write, append-or-create: a resumable runner calls this once
+    * per input range, so an unconditional createOrReplace would wipe earlier
+    * ranges. One Iceberg partition per [[graft.Router.SinkPartitionCols]];
+    * file sizes are governed by Iceberg's own `write.target-file-size-bytes`
+    * table property (records-per-file is not an Iceberg write option).
     */
-  override def writeFanOut(
-      routed: DataFrame, sink: String, maxRecordsPerFile: Long): Unit = {
-    import org.apache.spark.sql.functions._
+  def writeFanOut(routed: DataFrame, sink: String): Unit = {
+    import graft.Router
+    import org.apache.spark.sql.functions.col
     val df = routed
-      .withColumn("new_label_ns", graft.Router.labelNs)
-      .drop(graft.Router.NewLabel)
+      .withColumn(Router.LabelNsCol, Router.labelNs)
+      .drop(Router.NewLabel)
     val w = df.writeTo(s"$catalog.$sink")
+    val parts = Router.SinkPartitionCols.map(col)
     if (routed.sparkSession.catalog.tableExists(s"$catalog.$sink")) w.append()
-    else w.partitionedBy(col("new_label_ns"), col(graft.Router.NewTag)).create()
+    else w.partitionedBy(parts.head, parts.tail: _*).create()
   }
 
   /** Current snapshot id from the Iceberg metadata table. */

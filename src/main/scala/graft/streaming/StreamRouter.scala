@@ -399,13 +399,13 @@ object StreamRouter {
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): DataStreamWriter[Row] =
     routed
-      .withColumn("new_label_ns", Router.labelNs)
+      .withColumn(Router.LabelNsCol, Router.labelNs)
       .drop(Router.NewLabel)
       .writeStream
       .format("parquet")
       .option("path", outDir)
       .option("checkpointLocation", checkpointDir)
-      .partitionBy("new_label_ns", Router.NewTag)
+      .partitionBy(Router.SinkPartitionCols: _*)
       .outputMode(OutputMode.Append)
       .trigger(trigger)
 }

@@ -145,15 +145,6 @@ object TextFunctions {
   def fingerprint(text: Column): Column =
     graft.expressions.FnvHash64(text)
 
-  /** Shift-invariant n-word rolling fingerprint: min of the shingle
-    * hashes — equal for any rotation/permutation-stable near-identical
-    * docs' shared shingles; the winnowing-style representative hash.
-    */
-  def shingleMinHash(text: Column, n: Int = 3): Column = {
-    val sh = shingles(text, n)
-    array_min(transform(sh, s => xxhash64(s)))
-  }
-
   /** n-word shingles; shorter docs collapse to a single whole-text shingle.
     * One-pass codegen'd expression — the lambda form ([[shinglesSql]], kept
     * as the differential oracle) re-evaluates the full word split inside

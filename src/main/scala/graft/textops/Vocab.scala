@@ -142,7 +142,7 @@ object Vocab {
         // pattern needs no escaping and cannot straddle cell boundaries
         val next = words.withColumn("cells",
           expr(s"replace(cells, ',$l;,$r;', ',$l$r;')")).localCheckpoint()
-        releaseLocalCheckpoint(words)
+        graft.dedup.Dedup.releaseLocalCheckpoint(words)
         words = next
       }
       round += 1
@@ -297,16 +297,6 @@ object Vocab {
         col("piece_pos").cast("long").as("piece_pos"),
         col("__p.piece").as("piece"), col("__p.piece_id").as("piece_id"))
   }
-
-  /** Unpersist the block-manager blocks behind a localCheckpoint'ed frame
-    * (same rationale as the dedup fixpoint's release).
-    */
-  private def releaseLocalCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ =>
-    }
 
   /** Lay each document's token stream out as fixed-budget context chunks:
     * chunk `i` covers word positions [i·chunkSize, min((i+1)·chunkSize, n)).

@@ -84,7 +84,8 @@ class CheckpointSpec extends AnyFunSuite {
     Files.createDirectories(manifests)
     Files.write(manifests.resolve("range_0.json"),
       s"""{"range_id":0,
-         |"input_fingerprint":"${Checkpoint.filesFingerprint(files)}",
+         |"input_fingerprint":"${Lineage.fingerprint(
+              java.nio.file.Paths.get(inDir), files.map(_.toPath))}",
          |"rule_version_hash":"${plan.ruleVersionHash}",
          |"emitted":10,"matched":10,"unmatched":0,
          |"sink_counts":{"@default/t.q\\"r":3,"@default/t.tab\there":2,"@default/t.web":5}}"""
@@ -96,5 +97,44 @@ class CheckpointSpec extends AnyFunSuite {
     assert(run.ranges.head.matched == 10L)
     assert(run.totalSinkCounts ==
       Map("@default/t.q\"r" -> 3L, "@default/t.tab\there" -> 2L, "@default/t.web" -> 5L))
+  }
+
+  test("a range rewritten in place with the same name and size re-runs") {
+    import spark.implicits._
+    val inDir = Files.createTempDirectory("graft-ckpt-rw-in").toString
+    val newDir = Files.createTempDirectory("graft-ckpt-rw-new").toString
+    val outDir = Files.createTempDirectory("graft-ckpt-rw-out").toString
+    def write(source: String, dir: String): Unit =
+      (0 until 200).map(i => (f"d$i%04d", source)).toDF("doc_id", "source")
+        .coalesce(1).write.mode("overwrite").option("compression", "none")
+        .parquet(dir)
+    def dataFile(dir: String): java.io.File =
+      new java.io.File(dir).listFiles()
+        .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("."))
+        .head
+    write("td.apache.access", inDir)
+    val plan = Pipelines.flagshipPlan(spark.read.parquet(inDir))
+    val run1 = Checkpoint.runResumable(spark, inDir, outDir, plan, numRanges = 1)
+    assert(run1.processed == 1)
+
+    // same row count, same-length tag → same file size; copy the data file
+    // AND its .crc sidecar over the old names (without the sidecar the
+    // local filesystem fails the read with a ChecksumException)
+    write("td.nginx.access!", newDir)
+    val (oldF, newF) = (dataFile(inDir), dataFile(newDir))
+    val oldMtime = oldF.lastModified()
+    def crc(f: java.io.File) = new java.io.File(f.getParentFile, s".${f.getName}.crc")
+    Files.copy(newF.toPath, oldF.toPath, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    Files.copy(crc(newF).toPath, crc(oldF).toPath,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    assert(oldF.length() == newF.length())
+    assert(oldF.setLastModified(oldMtime + 60000L))
+
+    val want = Router.sinkCounts(Router.route(spark.read.parquet(inDir), plan))
+      .collect().map(r => s"${r.getString(0)}/${r.getString(1)}" -> r.getLong(2)).toMap
+    assert(want != run1.totalSinkCounts)
+    val run2 = Checkpoint.runResumable(spark, inDir, outDir, plan, numRanges = 1)
+    assert(run2.processed == 1)
+    assert(run2.totalSinkCounts == want)
   }
 }

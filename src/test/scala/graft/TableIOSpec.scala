@@ -38,7 +38,7 @@ class TableIOSpec extends AnyFunSuite {
       Seq(Rule("source", "^td\\.(\\w+)\\.access$", "site.$1"),
         Rule("source", "^$", "other", invert = true)),
       RoutingConfig(), "source")
-    src.writeFanOut(routed, s"$dir/out", maxRecordsPerFile = 100L)
+    Router.writeFanOut(routed, s"$dir/out", maxRecordsPerFile = 100L, format = "json")
     val back = spark.read.schema(StructType(Seq(
       StructField("doc_id", StringType), StructField("source", StringType))))
       .option("recursiveFileLookup", "false")
@@ -58,7 +58,7 @@ class TableIOSpec extends AnyFunSuite {
     val v1 = ParquetIO.versionId(spark, s"$dir/in")
 
     val routed = Router.route(df, Pipelines.flagshipPlan(df))
-    ParquetIO.writeFanOut(routed, s"$dir/out", maxRecordsPerFile = 1000L)
+    Router.writeFanOut(routed, s"$dir/out", maxRecordsPerFile = 1000L)
     val out = spark.read.parquet(s"$dir/out")
     assert(out.count() == routed.count())
     assert(out.columns.contains("new_label_ns") && out.columns.contains("new_tag"))
@@ -72,7 +72,7 @@ class TableIOSpec extends AnyFunSuite {
     // listing would hash every partitioned table to the empty-list value)
     val vOut1 = ParquetIO.versionId(spark, s"$dir/out")
     assert(vOut1 != ParquetIO.versionId(spark, s"$dir/in"))
-    ParquetIO.writeFanOut(
+    Router.writeFanOut(
       Router.route(ParquetIO.read(spark, s"$dir/in"),
         Pipelines.flagshipPlan(ParquetIO.read(spark, s"$dir/in"))),
       s"$dir/out2", maxRecordsPerFile = 1000L)
@@ -237,5 +237,29 @@ class TableIOSpec extends AnyFunSuite {
     assert(mines == 2)
     CorpusArtifacts.clustersCached(spark, "fpA", "k2", base, () => mine())
     assert(mines == 3)
+  }
+
+  test("clustersCached: a manifest in the earlier string-template layout still hits") {
+    import graft.dedup.CorpusArtifacts
+    import spark.implicits._
+    val base = java.nio.file.Files.createTempDirectory("graft_clart_old").toString
+    val docs = (0L until 20L).toDF("doc_id")
+    val pairs = Seq((0L, 1L), (5L, 6L)).toDF("id_a", "id_b")
+    var mines = 0
+    def mine(): org.apache.spark.sql.DataFrame = {
+      mines += 1
+      graft.dedup.Dedup.nearDupClusters(docs, pairs)
+    }
+    // the earlier writer interpolated the key verbatim, so a tab stayed raw
+    val (fp, key) = ("fpOld", "cc-v1\tlegacy")
+    val want = CorpusArtifacts.clustersCached(spark, fp, key, base, () => mine())
+      .as[(Long, Long)].collect().toSet
+    assert(mines == 1)
+    val dirs = new java.io.File(base).listFiles().filter(_.getName.startsWith("clusters_"))
+    assert(dirs.length == 1)
+    java.nio.file.Files.write(dirs.head.toPath.resolve("_graft_manifest.json"),
+      s"""{"corpus_fingerprint":"$fp","miner_key":"$key"}""".getBytes("UTF-8"))
+    val got = CorpusArtifacts.clustersCached(spark, fp, key, base, () => mine())
+    assert(mines == 1 && got.as[(Long, Long)].collect().toSet == want)
   }
 }
