@@ -72,8 +72,54 @@ object JaccardPpmExpr {
     * where Spark's collection set-ops distinguish -0.0 from 0.0 (no
     * NormalizeFloatingNumbers inside array expressions; verified against
     * the built-ins by SketchExprSpec), which boxed equals matches exactly.
+    * `array<long>` (the MinHash verify sets) takes a primitive path; a
+    * null element counts as one more distinct element on either path.
     */
-  def compute(a: ArrayData, b: ArrayData, elemType: DataType): Long = {
+  def compute(a: ArrayData, b: ArrayData, elemType: DataType): Long =
+    if (elemType eq LongType) computeLong(a, b) else computeBoxed(a, b, elemType)
+
+  private def ppm(inter: Long, union: Long): Long =
+    if (union == 0L) 0L
+    else math.floor(inter * 1000000.0 / union).toLong
+
+  /** One [[LongTable]] pass: A's keys get stamp `base`; a B key found at
+    * `base` is shared and moves to `base + 1`, a new B key enters at
+    * `base + 1`, so a repeated B key is seen once.
+    */
+  private def computeLong(a: ArrayData, b: ArrayData): Long = {
+    val na = a.numElements()
+    val nb = b.numElements()
+    val t = LongTable.acquire(na.toLong + nb, 2)
+    val inA = t.base
+    val seenB = inA + 1
+    var nullA = false
+    var union = 0L
+    var i = 0
+    while (i < na) {
+      if (a.isNullAt(i)) nullA = true
+      else if (t.add(a.getLong(i))) union += 1
+      i += 1
+    }
+    if (nullA) union += 1
+    var nullB = false
+    var inter = 0L
+    i = 0
+    while (i < nb) {
+      if (b.isNullAt(i)) {
+        if (!nullB) { nullB = true; if (nullA) inter += 1 else union += 1 }
+      } else {
+        val x = b.getLong(i)
+        val s = t.slot(x)
+        val st = t.stamp(s)
+        if (st == inA) { inter += 1; t.put(s, x, seenB) }
+        else if (st < inA) { union += 1; t.put(s, x, seenB) }
+      }
+      i += 1
+    }
+    ppm(inter, union)
+  }
+
+  private def computeBoxed(a: ArrayData, b: ArrayData, elemType: DataType): Long = {
     val aArr = a.toObjectArray(elemType)
     val setA = new java.util.HashSet[Any](aArr.length * 2)
     var i = 0
@@ -91,8 +137,7 @@ object JaccardPpmExpr {
       }
       i += 1
     }
-    if (union == 0L) 0L
-    else math.floor(inter * 1000000.0 / union).toLong
+    ppm(inter, union)
   }
 
   def apply(a: Column, b: Column): Column =

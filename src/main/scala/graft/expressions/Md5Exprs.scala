@@ -4,7 +4,7 @@ import java.security.MessageDigest
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
@@ -128,7 +128,8 @@ object Md5MinHashSig {
 
 /** text → 64-bit hash of every whitespace word derived from the word's md5
   * digest (first 8 bytes, big-endian) — the oracle-portable analog of
-  * [[WordHashes]]. Feeds [[SimHashBits]]; the resulting bitstring is
+  * [[WordHashes]], over the same [[TextWords]] scan. Feeds
+  * [[SimHashBits]]; the resulting bitstring is
   * reproducible in SQL as `lpad(conv(substr(md5(w),1,16),16,2),64,'0')`
   * votes (Spark) / per-hex-char binary expansion (DuckDB).
   */
@@ -147,30 +148,28 @@ case class Md5WordHashes(child: Expression) extends UnaryExpression {
 }
 
 object Md5WordHashes {
-  private val ws = java.util.regex.Pattern.compile("\\s+")
-
   private val digests: ThreadLocal[MessageDigest] =
     ThreadLocal.withInitial(() => MessageDigest.getInstance("MD5"))
 
   /** Public so generated code can call it. */
-  def compute(text: UTF8String): GenericArrayData = {
-    val trimmed = text.trim.toString
-    if (trimmed.isEmpty) return new GenericArrayData(Array.emptyLongArray)
-    val words = ws.split(trimmed, -1)
+  def compute(text: UTF8String): ArrayData = {
+    val w = TextWords.of(text)
     val md = digests.get()
-    val out = new Array[Long](words.length)
+    val d = new Array[Byte](16)
+    val out = new Array[Long](w.count)
     var i = 0
-    while (i < words.length) {
+    while (i < w.count) {
+      val from = w.start(i)
       md.reset()
-      md.update(words(i).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      val d = md.digest()
+      md.update(w.bytes, from, w.end(i) - from)
+      md.digest(d, 0, 16)
       var h = 0L
       var b = 0
       while (b < 8) { h = (h << 8) | (d(b) & 0xffL); b += 1 }
       out(i) = h
       i += 1
     }
-    new GenericArrayData(out)
+    UnsafeArrayData.fromPrimitiveArray(out)
   }
 
   def apply(text: Column): Column =

@@ -48,7 +48,7 @@ object QualityScoreExpr {
   /** Public so generated code can call it. */
   def compute(text: UTF8String): Long = {
     val nChars = text.numChars().toLong // Spark length() = code points
-    val nWords = ShingleStrings.splitWords(text).length.toLong
+    val nWords = TextWords.of(text).count.toLong
     val nStop = CountMatches.compute(text.toLowerCase, stopPattern).toLong
     val nPunct = CountMatches.compute(text, punctPattern).toLong
     val stopPpm = ppm(nStop, nWords)

@@ -1,11 +1,9 @@
 package graft.expressions
 
-import java.util.regex.Pattern
-
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData, XXH64}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 import org.apache.spark.unsafe.Platform
@@ -19,15 +17,17 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Why: the lambda pipeline materializes, per shingle, a sliced word array
   * plus a concatenated string — all interpreted (higher-order functions do
-  * not codegen) — and the MinHash pipeline evaluates it three times per doc
-  * (signature + both sides of the verify join-back). Here each word's UTF-8
-  * bytes are extracted once and shingle hashes are computed over a reused
-  * thread-local byte buffer: no per-shingle string, no per-shingle array.
+  * not codegen) — and the MinHash pipeline evaluates it once per doc plus
+  * once per candidate side of the verify join-back. Here [[TextWords]]
+  * scans the text's bytes once, every shingle is hashed as one slice of
+  * its joined-words buffer, and duplicates are dropped in a per-thread
+  * [[LongTable]]: no String decode, no per-shingle copy, no boxing.
   *
-  * Semantics preserved exactly: words = `split(trim(text), "\\s+", -1)`
-  * ("" → no words); fewer than n words → ONE whole-text shingle (possibly
-  * ""); shingle text = words joined by a single space; hash =
-  * `xxhash64(shingle)` = XXH64 over the UTF-8 bytes, seed 42.
+  * Semantics preserved exactly: words as [[TextWords]] defines them
+  * (`split(trim(text), "\\s+", -1)`, "" → no words); fewer than n words →
+  * ONE whole-text shingle (possibly ""); shingle text = words joined by a
+  * single space; hash = `xxhash64(shingle)` = XXH64 over the UTF-8 bytes,
+  * seed 42.
   */
 case class ShingleHashes(child: Expression, n: Int) extends UnaryExpression {
   require(n > 0)
@@ -46,60 +46,29 @@ case class ShingleHashes(child: Expression, n: Int) extends UnaryExpression {
 }
 
 object ShingleHashes {
-  private val ws = Pattern.compile("\\s+")
-  private val buffers: ThreadLocal[Array[Byte]] =
-    ThreadLocal.withInitial(() => new Array[Byte](1 << 12))
 
   /** Public so generated code can call it. */
-  def compute(text: UTF8String, n: Int): GenericArrayData = {
-    val trimmed = text.trim.toString
-    val words: Array[String] =
-      if (trimmed.isEmpty) Array.empty else ws.split(trimmed, -1)
-
-    if (words.length < n) {
+  def compute(text: UTF8String, n: Int): ArrayData = {
+    val w = TextWords.of(text)
+    val buf = w.bytes
+    if (w.count < n) {
       // single whole-text shingle (possibly ""), matching concat_ws(" ", ws)
-      return new GenericArrayData(Array(hashUtf8(words.mkString(" "))))
+      return UnsafeArrayData.fromPrimitiveArray(Array(
+        XXH64.hashUnsafeBytes(buf, Platform.BYTE_ARRAY_OFFSET, w.length, 42L)))
     }
-
-    val wordBytes = new Array[Array[Byte]](words.length)
-    var i = 0
-    while (i < words.length) {
-      wordBytes(i) = words(i).getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      i += 1
-    }
-    val out = new Array[Long](words.length - n + 1)
-    val seen = new java.util.HashSet[java.lang.Long](out.length * 2)
+    val total = w.count - n + 1
+    val out = new Array[Long](total)
+    val seen = LongTable.acquire(total, 1)
     var outLen = 0
     var s = 0
-    while (s <= words.length - n) {
-      var len = n - 1 // separator spaces
-      var j = 0
-      while (j < n) { len += wordBytes(s + j).length; j += 1 }
-      var buf = buffers.get()
-      if (buf.length < len) {
-        buf = new Array[Byte](Integer.highestOneBit(len) * 2)
-        buffers.set(buf)
-      }
-      var pos = 0
-      j = 0
-      while (j < n) {
-        if (j > 0) { buf(pos) = ' '; pos += 1 }
-        val wb = wordBytes(s + j)
-        System.arraycopy(wb, 0, buf, pos, wb.length)
-        pos += wb.length
-        j += 1
-      }
-      val h = XXH64.hashUnsafeBytes(buf, Platform.BYTE_ARRAY_OFFSET, len, 42L)
+    while (s < total) {
+      val from = w.start(s)
+      val h = XXH64.hashUnsafeBytes(
+        buf, Platform.BYTE_ARRAY_OFFSET + from, w.end(s + n - 1) - from, 42L)
       if (seen.add(h)) { out(outLen) = h; outLen += 1 }
       s += 1
     }
-    new GenericArrayData(
-      if (outLen == out.length) out else java.util.Arrays.copyOf(out, outLen))
-  }
-
-  private def hashUtf8(s: String): Long = {
-    val b = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    XXH64.hashUnsafeBytes(b, Platform.BYTE_ARRAY_OFFSET, b.length, 42L)
+    UnsafeArrayData.fromPrimitiveArray(out, Platform.LONG_ARRAY_OFFSET, outLen, 8)
   }
 
   def apply(text: Column, n: Int): Column =

@@ -1,7 +1,6 @@
 package graft.expressions
 
 import java.security.MessageDigest
-import java.util.regex.Pattern
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -19,13 +18,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * re-evaluates the FULL `split` inside the lambda for every element —
   * higher-order-function lambdas re-evaluate captured subtrees per call —
   * so a w-word document pays O(w) regex splits of the whole text: O(w²)
-  * work per row, all interpreted. These expressions split once and build
-  * every span over the word array in a single pass. Each is differential-
-  * tested against the lambda formulation it replaces (SpanExprSpec).
+  * work per row, all interpreted. These expressions scan the text once
+  * with [[TextWords]] and take every span as one slice of its
+  * joined-words buffer. Each is differential-tested against the lambda
+  * formulation it replaces (SpanExprSpec).
   *
-  * Word semantics shared with [[ShingleHashes]] (and the SQL
-  * `TextFunctions.words`): words = `split(trim(text), "\s+", -1)`,
-  * "" after trim → no words.
+  * Word semantics are [[TextWords]]' (shared with [[ShingleHashes]] and
+  * the SQL `TextFunctions.words`): words = `split(trim(text), "\s+", -1)`,
+  * "" after trim → no words; text that is not valid UTF-8 is split as
+  * its `toString` decode, like the SQL form.
   */
 
 /** text → n-word shingle strings, one pass.
@@ -56,66 +57,34 @@ case class ShingleStrings(
 }
 
 object ShingleStrings {
-  private val ws = Pattern.compile("\\s+")
-
-  private[expressions] def splitWords(text: UTF8String): Array[String] = {
-    val trimmed = text.trim.toString
-    if (trimmed.isEmpty) Array.empty else ws.split(trimmed, -1)
-  }
 
   /** Public so generated code can call it. */
   def compute(
       text: UTF8String, n: Int, wholeIfShort: Boolean,
       distinct: Boolean): GenericArrayData = {
-    val words = splitWords(text)
-    if (words.length < n) {
+    val w = TextWords.of(text)
+    if (w.count < n) {
       return new GenericArrayData(
-        if (wholeIfShort) Array[Any](UTF8String.fromString(words.mkString(" ")))
+        if (wholeIfShort) Array[Any](slice(w.bytes, 0, w.length))
         else Array.empty[Any])
     }
-    val total = words.length - n + 1
-    val sb = new java.lang.StringBuilder(64)
-    if (!distinct) {
-      val out = new Array[Any](total)
-      var s = 0
-      while (s < total) {
-        sb.setLength(0)
-        var j = 0
-        while (j < n) {
-          if (j > 0) sb.append(' ')
-          sb.append(words(s + j))
-          j += 1
-        }
-        out(s) = UTF8String.fromString(sb.toString)
-        s += 1
-      }
-      new GenericArrayData(out)
-    } else {
-      val out = new Array[Any](total)
-      val seen = new java.util.HashSet[String](total * 2)
-      var outLen = 0
-      var s = 0
-      while (s < total) {
-        sb.setLength(0)
-        var j = 0
-        while (j < n) {
-          if (j > 0) sb.append(' ')
-          sb.append(words(s + j))
-          j += 1
-        }
-        val str = sb.toString
-        if (seen.add(str)) { out(outLen) = UTF8String.fromString(str); outLen += 1 }
-        s += 1
-      }
-      new GenericArrayData(
-        if (outLen == total) out
-        else {
-          val trimmedOut = new Array[Any](outLen)
-          System.arraycopy(out, 0, trimmedOut, 0, outLen)
-          trimmedOut
-        })
+    val total = w.count - n + 1
+    val out = new Array[Any](total)
+    val seen = if (distinct) new java.util.HashSet[UTF8String](total * 2) else null
+    var outLen = 0
+    var s = 0
+    while (s < total) {
+      val str = slice(w.bytes, w.start(s), w.end(s + n - 1))
+      if (seen == null || seen.add(str)) { out(outLen) = str; outLen += 1 }
+      s += 1
     }
+    new GenericArrayData(
+      if (outLen == total) out else out.take(outLen))
   }
+
+  /** A copy: the scanner's buffer is reused by the next row. */
+  private def slice(bytes: Array[Byte], from: Int, until: Int): UTF8String =
+    UTF8String.fromBytes(java.util.Arrays.copyOfRange(bytes, from, until))
 
   def apply(text: Column, n: Int, wholeIfShort: Boolean = true,
       distinct: Boolean = false): Column =
@@ -150,44 +119,20 @@ case class Md5SpanFps(child: Expression, k: Int) extends UnaryExpression {
 object Md5SpanFps {
   private val digests: ThreadLocal[MessageDigest] =
     ThreadLocal.withInitial(() => MessageDigest.getInstance("MD5"))
-  private val buffers: ThreadLocal[Array[Byte]] =
-    ThreadLocal.withInitial(() => new Array[Byte](1 << 12))
 
   /** Public so generated code can call it. */
   def compute(text: UTF8String, k: Int): GenericArrayData = {
-    val words = ShingleStrings.splitWords(text)
-    if (words.length < k) return new GenericArrayData(Array.empty[Any])
-    val wordBytes = new Array[Array[Byte]](words.length)
-    var i = 0
-    while (i < words.length) {
-      wordBytes(i) = words(i).getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      i += 1
-    }
+    val w = TextWords.of(text)
+    if (w.count < k) return new GenericArrayData(Array.empty[Any])
     val md = digests.get()
     val scratch = new Array[Byte](16)
-    val total = words.length - k + 1
+    val total = w.count - k + 1
     val out = new Array[Any](total)
     var s = 0
     while (s < total) {
-      var len = k - 1
-      var j = 0
-      while (j < k) { len += wordBytes(s + j).length; j += 1 }
-      var buf = buffers.get()
-      if (buf.length < len) {
-        buf = new Array[Byte](Integer.highestOneBit(len) * 2)
-        buffers.set(buf)
-      }
-      var pos = 0
-      j = 0
-      while (j < k) {
-        if (j > 0) { buf(pos) = ' '; pos += 1 }
-        val wb = wordBytes(s + j)
-        System.arraycopy(wb, 0, buf, pos, wb.length)
-        pos += wb.length
-        j += 1
-      }
+      val from = w.start(s)
       md.reset()
-      md.update(buf, 0, len)
+      md.update(w.bytes, from, w.end(s + k - 1) - from)
       md.digest(scratch, 0, 16)
       out(s) = Md5MinHashSig.toHex(scratch)
       s += 1

@@ -1,10 +1,8 @@
 package graft.expressions
 
-import java.util.regex.Pattern
-
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, UnsafeArrayData, XXH64}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
@@ -87,7 +85,8 @@ object DotDouble {
 
 /** text → xxhash64 of every whitespace word, one pass — the codegen'd
   * replacement for `transform(words(text), w => xxhash64(w))` (identical
-  * values and order; "" → empty array). Feeds [[SimHashBits]].
+  * values and order; "" → empty array), over the [[TextWords]] scan.
+  * Feeds [[SimHashBits]].
   */
 case class WordHashes(child: Expression) extends UnaryExpression {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
@@ -104,21 +103,19 @@ case class WordHashes(child: Expression) extends UnaryExpression {
 }
 
 object WordHashes {
-  private val ws = Pattern.compile("\\s+")
 
   /** Public so generated code can call it. */
-  def compute(text: UTF8String): GenericArrayData = {
-    val trimmed = text.trim.toString
-    if (trimmed.isEmpty) return new GenericArrayData(Array.emptyLongArray)
-    val words = ws.split(trimmed, -1)
-    val out = new Array[Long](words.length)
+  def compute(text: UTF8String): ArrayData = {
+    val w = TextWords.of(text)
+    val out = new Array[Long](w.count)
     var i = 0
-    while (i < words.length) {
-      val b = words(i).getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      out(i) = XXH64.hashUnsafeBytes(b, Platform.BYTE_ARRAY_OFFSET, b.length, 42L)
+    while (i < w.count) {
+      val from = w.start(i)
+      out(i) = XXH64.hashUnsafeBytes(
+        w.bytes, Platform.BYTE_ARRAY_OFFSET + from, w.end(i) - from, 42L)
       i += 1
     }
-    new GenericArrayData(out)
+    UnsafeArrayData.fromPrimitiveArray(out)
   }
 
   def apply(text: Column): Column =

@@ -168,37 +168,52 @@ class PlanShapeSpec extends AnyFunSuite {
     }
   }
 
+  /** Whether any node in `p`'s subtree builds a shingle set. */
+  private def buildsSets(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Boolean =
+    p.exists(_.expressions.exists(_.exists {
+      case _: graft.expressions.ShingleStrings => true
+      case _: graft.expressions.ShingleHashes => true
+      case _ => false
+    }))
+
+  /** The one join keyed on `key` that attaches a doc side to candidate
+    * pairs (the input carrying both `pairKeys`): (pair input, doc input).
+    */
+  private def attachJoin(
+      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
+      key: String, pairKeys: Set[String]) = {
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    val joins = plan.collect {
+      case j: Join if j.condition.exists(_.references.exists(_.name == key)) => j
+    }
+    assert(joins.size == 1, s"expected one join keyed on $key:\n$plan")
+    val (pair, doc) = joins.head.children
+      .partition(c => pairKeys.subsetOf(c.output.map(_.name).toSet))
+    assert(pair.size == 1 && doc.size == 1, s"the $key join attaches no doc side:\n$plan")
+    (pair.head, doc.head)
+  }
+
   test("minhash verify joins attach text; sets are never built below a join") {
-    import org.apache.spark.sql.catalyst.plans.logical.{Join, Project}
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val frames = Seq(
       "portable" -> graft.dedup.Dedup.minHashLshPairsPortable(docs),
       "fast" -> graft.dedup.Dedup.minHashLshPairs(docs))
     frames.foreach { case (name, df) =>
-      val joins = df.queryExecution.optimizedPlan.collect { case j: Join => j }
-      assert(joins.nonEmpty, s"$name: expected verify joins in the plan")
-      // a shingle-set expression in a join's input projection means the
-      // set materializes for EVERY corpus row on that side (and rides the
+      val plan = df.queryExecution.optimizedPlan
+      // a shingle-set expression anywhere below a doc side means the set
+      // materializes for EVERY corpus row on that side (and rides the
       // verify exchange/broadcast); sets must be built after the
       // candidate attach, where only LSH-candidate rows pay
-      joins.foreach { j =>
-        j.children.foreach {
-          case p: Project =>
-            val bad = p.projectList.exists(_.exists {
-              case _: graft.expressions.ShingleStrings => true
-              case _: graft.expressions.ShingleHashes => true
-              case _ => false
-            })
-            assert(!bad, s"$name: a verify join input materializes " +
-              s"shingle sets corpus-wide:\n${df.queryExecution.optimizedPlan}")
-          case _ =>
-        }
+      for (key <- Seq("id_a", "id_b")) {
+        val (pairs, doc) = attachJoin(plan, key, Set("id_a", "id_b"))
+        assert(buildsSets(pairs), s"$name: banding builds no sets below the $key join")
+        assert(!buildsSets(doc), s"$name: the $key verify side materializes " +
+          s"shingle sets corpus-wide:\n$plan")
       }
     }
   }
 
   test("incremental near-dup verify attaches corpus TEXT; only the increment side carries sets") {
-    import org.apache.spark.sql.catalyst.plans.logical.{Join, Project}
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val newBatch = docs.filter(col("doc_id") % 10 === 0)
     val corpus = docs.filter(col("doc_id") % 10 =!= 0)
@@ -206,24 +221,17 @@ class PlanShapeSpec extends AnyFunSuite {
       "portable" -> graft.dedup.Dedup.incrementalNearDupPairs(newBatch, corpus),
       "fast" -> graft.dedup.Dedup.incrementalNearDupPairsFast(newBatch, corpus))
     frames.foreach { case (name, df) =>
-      val joins = df.queryExecution.optimizedPlan.collect { case j: Join => j }
+      val plan = df.queryExecution.optimizedPlan
       // the increment side legitimately joins its precomputed sets (the
       // batch is small by contract; its sets already exist for banding);
-      // the CORPUS verify side must attach text — a second set-building
-      // Project in a join input would be a corpus-wide set pass on top of
-      // the (required) band-table pass
-      val setBuildingJoinInputs = joins.flatMap(_.children).distinct.count {
-        case p: Project => p.projectList.exists(_.exists {
-          case _: graft.expressions.ShingleStrings => true
-          case _: graft.expressions.ShingleHashes => true
-          case _ => false
-        })
-        case _ => false
-      }
-      assert(setBuildingJoinInputs <= 1,
-        s"$name: expected only the increment side to carry sets into a " +
-          s"join; the corpus verify side must attach text:\n" +
-          s"${df.queryExecution.optimizedPlan}")
+      // the CORPUS verify side must attach text — set building anywhere
+      // below it would be a corpus-wide set pass on top of the (required)
+      // band-table pass
+      val (_, increment) = attachJoin(plan, "id_n", Set("id_n", "id_c"))
+      assert(buildsSets(increment), s"$name: the increment side carries no sets")
+      val (_, corpusSide) = attachJoin(plan, "id_c", Set("id_n", "id_c"))
+      assert(!buildsSets(corpusSide), s"$name: the corpus verify side builds " +
+        s"shingle sets; it must attach text:\n$plan")
     }
   }
 

@@ -126,6 +126,140 @@ class SketchExprSpec extends AnyFunSuite {
     }
   }
 
+  test("scanner kernels ≡ their SQL formulations on hostile text") {
+    import graft.expressions.{Md5WordHashes, ShingleHashes, WordHashes}
+    val df = TextEdgeCases.frame(spark)
+    // the invalid rows reach the kernels as invalid UTF-8
+    assert(df.filter(!expr("is_valid_utf8(text)")).count() ==
+      TextEdgeCases.invalidHex.size)
+    val ws = TextFunctions.words(col("text"))
+    val kernels = Seq(1, 2, 3, 5).map(n => (s"shingle_hashes n=$n",
+      ShingleHashes(col("text"), n),
+      array_distinct(transform(TextFunctions.shinglesSql(col("text"), n),
+        s => xxhash64(s))))) ++ Seq(
+      ("word_hashes", WordHashes(col("text")), transform(ws, w => xxhash64(w))),
+      // first 8 md5 bytes as a signed big-endian long
+      ("md5_word_hashes", Md5WordHashes(col("text")),
+        transform(ws, w => conv(substring(md5(w), 1, 16), 16, -10).cast("long"))))
+    kernels.foreach { case (name, fast, ref) =>
+      df.select(col("doc_id"), fast.as("fast"), ref.as("ref")).collect().foreach { r =>
+        assert(r.getSeq[Long](1) == r.getSeq[Long](2), s"$name doc=${r.getLong(0)}")
+      }
+    }
+  }
+
+  test("scanner kernels read offset, off-heap and > 1 MB texts like fresh strings") {
+    import graft.expressions._
+    import org.apache.spark.sql.types.StringType
+    import org.apache.spark.unsafe.Platform
+    import org.apache.spark.unsafe.types.UTF8String
+    // ShingleStrings runs before later kernels reload the scanner, so an
+    // output that still pointed into the scanner's buffer would show here
+    def kernels(t: UTF8String): Seq[Any] = Seq(
+      ShingleHashes.compute(t, 1).toLongArray.toSeq,
+      ShingleHashes.compute(t, 3).toLongArray.toSeq,
+      ShingleStrings.compute(t, 2, true, true).toObjectArray(StringType).toSeq,
+      ShingleStrings.compute(t, 2, false, false).toObjectArray(StringType).toSeq,
+      WordHashes.compute(t).toLongArray.toSeq,
+      Md5WordHashes.compute(t).toLongArray.toSeq,
+      Md5SpanFps.compute(t, 2).toObjectArray(StringType).toSeq,
+      QualityScoreExpr.compute(t))
+    def unhexBytes(h: String) = h.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray
+    val texts = TextEdgeCases.strings.map(_.getBytes("UTF-8")) ++
+      TextEdgeCases.invalidHex.map(unhexBytes)
+    texts.foreach { b =>
+      val want = kernels(UTF8String.fromBytes(b))
+      for (pad <- Seq("x", " \t", "\u00e9")) {
+        val p = pad.getBytes("UTF-8")
+        val sliced = UTF8String.fromBytes(p ++ b ++ p, p.length, b.length)
+        assert(kernels(sliced) == want, s"pad=${pad.map(_.toInt)}")
+      }
+      val addr = Platform.allocateMemory(math.max(1, b.length).toLong)
+      try {
+        Platform.copyMemory(b, Platform.BYTE_ARRAY_OFFSET, null, addr, b.length.toLong)
+        assert(kernels(UTF8String.fromAddress(null, addr, b.length)) == want, "off-heap")
+      } finally Platform.freeMemory(addr)
+    }
+    // a text over the 1 MiB a thread's scanner keeps gets its own scanner
+    val big = (1 to 200000).map(i => s"w${i % 5000}").mkString(" ")
+    assert(big.length > (1 << 20))
+    val words = big.split(" ")
+    val want = words.sliding(3).map { s =>
+      val sb = s.mkString(" ").getBytes("UTF-8")
+      org.apache.spark.sql.catalyst.expressions.XXH64
+        .hashUnsafeBytes(sb, Platform.BYTE_ARRAY_OFFSET, sb.length, 42L)
+    }.toSeq.distinct
+    assert(ShingleHashes.compute(UTF8String.fromString(big), 3).toLongArray.toSeq == want)
+    assert(WordHashes.compute(UTF8String.fromString(big)).numElements() == words.length)
+    assert(kernels(UTF8String.fromString("after big")) ==
+      kernels(UTF8String.fromBytes("after big".getBytes("UTF-8"))))
+  }
+
+  test("scanner kernels ≡ decode-and-regex-split on random bytes, valid or not") {
+    import graft.expressions.{ShingleStrings, WordHashes}
+    import org.apache.spark.sql.types.StringType
+    import org.apache.spark.unsafe.Platform
+    import org.apache.spark.unsafe.types.UTF8String
+    // what the kernels did before the byte scanner: decode, trim spaces,
+    // regex-split, re-encode
+    val ws = java.util.regex.Pattern.compile("\\s+")
+    def words(b: Array[Byte]): Seq[Array[Byte]] = {
+      val t = UTF8String.fromBytes(b).trim.toString
+      if (t.isEmpty) Seq.empty else ws.split(t, -1).toSeq.map(_.getBytes("UTF-8"))
+    }
+    // lead, continuation and separator bytes at the UTF-8 range edges
+    val alphabet = Array(0x20, 0x09, 0x0a, 0x0b, 0x0c, 0x0d, 0x41, 0x7f, 0x80,
+      0x8f, 0x90, 0x9f, 0xa0, 0xbf, 0xc0, 0xc1, 0xc2, 0xdf, 0xe0, 0xe1, 0xed,
+      0xef, 0xf0, 0xf1, 0xf4, 0xf5, 0xff).map(_.toByte)
+    val rnd = new scala.util.Random(17)
+    for (_ <- 0 until 20000) {
+      val b = Array.fill(rnd.nextInt(12))(alphabet(rnd.nextInt(alphabet.length)))
+      val t = UTF8String.fromBytes(b)
+      val want = words(b)
+      val hashes = want.map(w => org.apache.spark.sql.catalyst.expressions.XXH64
+        .hashUnsafeBytes(w, Platform.BYTE_ARRAY_OFFSET, w.length, 42L))
+      assert(WordHashes.compute(t).toLongArray.toSeq == hashes, b.mkString(","))
+      def join(ws: Seq[Array[Byte]]): Seq[Byte] =
+        ws.map(_.toSeq).reduceOption(_ ++ Seq(' '.toByte) ++ _).getOrElse(Seq.empty)
+      val pairs = if (want.size < 2) Seq(join(want)) else want.sliding(2).map(join).toSeq
+      assert(ShingleStrings.compute(t, 2, true, false).toObjectArray(StringType).toSeq
+        .map(_.asInstanceOf[UTF8String].getBytes.toSeq) == pairs, b.mkString(","))
+    }
+  }
+
+  test("JaccardPpmExpr long path ≡ jaccardPpmSql: extremes, dups, nulls, empties, size, reuse") {
+    val ext = Seq(Long.MinValue, Long.MaxValue, 0L, -1L).map(Option(_))
+    def some(xs: Seq[Long]) = xs.map(Option(_))
+    val rnd = new scala.util.Random(5)
+    val fixed: Seq[(Seq[Option[Long]], Seq[Option[Long]])] = Seq(
+      (Seq.empty, Seq.empty), // must give 0
+      (Seq.empty, some(Seq(1L))),
+      (some(Seq(1L)), Seq.empty),
+      (ext, ext),
+      (ext ++ ext, some(Seq(0L, 0L, -1L, 5L, Long.MinValue))),
+      (some(Seq(1L, 1L, 2L, 2L, 3L)), some(Seq(2L, 2L, 3L, 3L, 4L, 4L))),
+      (Seq(Some(1L), None, Some(2L)), Seq(None, Some(2L), Some(3L), None)),
+      (Seq(None, None), Seq(None)),
+      (Seq(None), some(Seq(1L))),
+      // larger than the table a thread starts with
+      (some(0L until 12000L), some((6000L until 20000L) ++ (6000L until 7000L))),
+      (some(Seq.fill(15000)(rnd.nextInt(20000).toLong)),
+        some(Seq.fill(15000)(rnd.nextInt(20000).toLong))))
+    // thousands of small rows over a 16-key universe, back to back on one
+    // thread: a stamp left by an earlier row must never read as present
+    val many = Seq.fill(3000)((
+      some(Seq.fill(rnd.nextInt(12))(rnd.nextInt(16).toLong)),
+      some(Seq.fill(rnd.nextInt(12))(rnd.nextInt(16).toLong))))
+    val out = (fixed ++ many).toDF("a", "b").coalesce(1).select(
+      Dedup.jaccardPpm(col("a"), col("b")).as("fast"),
+      Dedup.jaccardPpmSql(col("a"), col("b")).as("ref")).collect()
+    assert(out.length == fixed.length + many.length)
+    out.zipWithIndex.foreach { case (r, i) =>
+      assert(r.getLong(0) == r.getLong(1), s"row $i")
+    }
+    assert(out(0).getLong(0) == 0L)
+  }
+
   test("HammingDist ≡ built-in zip_with form, incl. unequal lengths") {
     val df = Seq(
       ("0101", "0101"), ("0101", "1010"), ("0101", "0111"),

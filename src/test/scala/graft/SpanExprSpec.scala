@@ -82,6 +82,38 @@ class SpanExprSpec extends AnyFunSuite {
     }
   }
 
+  test("ShingleStrings (all four flags), Md5SpanFps, QualityScoreExpr ≡ SQL on hostile text") {
+    val hostile = TextEdgeCases.frame(spark)
+    // compare bytes, not decoded strings: an invalid-UTF-8 output would
+    // decode to the same U+FFFD characters as its re-encoded form
+    def same(name: String, fast: org.apache.spark.sql.Column,
+        ref: org.apache.spark.sql.Column): Unit =
+      hostile.select(col("doc_id"),
+        transform(fast, s => hex(s)).as("fast"),
+        transform(ref, s => hex(s)).as("ref")).collect().foreach { r =>
+        assert(r.getSeq[String](1) == r.getSeq[String](2), s"$name doc=${r.getLong(0)}")
+      }
+    val ws = TextFunctions.words(col("text"))
+    for (n <- Seq(1, 2, 3)) {
+      val whole = TextFunctions.shinglesSql(col("text"), n)
+      val guarded = when(size(ws) < n, array().cast("array<string>")).otherwise(whole)
+      for (wholeIfShort <- Seq(true, false); distinct <- Seq(false, true)) {
+        val ref = if (wholeIfShort) whole else guarded
+        same(s"shingle_strings n=$n whole=$wholeIfShort distinct=$distinct",
+          graft.expressions.ShingleStrings(col("text"), n, wholeIfShort, distinct),
+          if (distinct) array_distinct(ref) else ref)
+      }
+    }
+    for (k <- Seq(1, 2, 8))
+      same(s"md5_span_fps k=$k", Dedup.spanFps(col("text"), k),
+        coalesce(Dedup.spanFpsSql(col("text"), k), array().cast("array<string>")))
+    hostile.select(col("doc_id"),
+      TextFunctions.qualityScore(col("text")),
+      TextFunctions.qualityScoreSql(col("text"))).collect().foreach { r =>
+      assert(r.get(1) == r.get(2), s"quality doc=${r.getLong(0)}")
+    }
+  }
+
   test("CountMatches ≡ size(regexp_extract_all(_, pat, 0)) on scoring patterns") {
     val pats = Seq(
       TextFunctions.bpeTokenPattern,
