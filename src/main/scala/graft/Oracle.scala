@@ -99,6 +99,7 @@ object Oracle {
               if (cfg.capitalizeRegexBackreference) capitalize(g) else g
             }
         }
+      case UnkeyedBackref(raw) => if (m.isEmpty) raw else ""
       case TagPh      => stripped
       case TagPart(i) => if (i < parts.length) parts(i) else ""
       case HostnamePh => cfg.hostname

@@ -2,7 +2,7 @@ package graft
 
 import graft.RuleCompiler.RoutingPlan
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The flagship parse → route → enrich → aggregate pipeline over the
   * synthesized sequence table — the end-to-end slice of SURVEY.md §7.3,
@@ -53,12 +53,6 @@ object Pipelines {
   def flagshipPlan(df: DataFrame): RoutingPlan =
     RuleCompiler.compileFused(flagshipRules, flagshipConfig, df.schema, "source")
 
-  /** route → enrich; the full row-level frame (fan-out write path, where
-    * every emitted row carries its sink attributes).
-    */
-  def routedEnriched(spark: SparkSession, df: DataFrame): DataFrame =
-    Router.enrich(Router.route(df, flagshipPlan(df)), tagLookup(spark))
-
   /** Whole pipeline to enriched per-sink counts (driver-checkable
     * aggregate). The dimension joins ABOVE the aggregate — enrichment attrs
     * are functions of the tag, so this touches #sinks rows, not #input rows
@@ -67,18 +61,4 @@ object Pipelines {
   def flagship(spark: SparkSession, df: DataFrame): DataFrame =
     Router.enrichCounts(
       Router.sinkCounts(Router.route(df, flagshipPlan(df))), tagLookup(spark))
-
-  /** Run with metrics observation; returns (per-sink counts collected,
-    * emitted/matched/unmatched). Used by benches and the checkpoint runner.
-    */
-  def flagshipWithMetrics(
-      spark: SparkSession,
-      df: DataFrame): (Array[org.apache.spark.sql.Row], Map[String, Any]) = {
-    val obs = Observation()
-    val plan = flagshipPlan(df)
-    val routed = Router.routeObserved(df, plan, obs)
-    val counts =
-      Router.enrichCounts(Router.sinkCounts(routed), tagLookup(spark)).collect()
-    (counts, obs.get)
-  }
 }

@@ -1,27 +1,16 @@
 package graft
 
-import scala.jdk.CollectionConverters._
-
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import org.apache.spark.sql.DataFrame
-
-/** Rule-table loaders — the C-PARSE surface. The reference's entire user
+/** Rule-table loader — the C-PARSE surface. The reference's entire user
   * interface is a config file: `<rule>` sections plus top-level params
-  * (/root/reference/lib/fluent/plugin/out_rewrite_tag_filter.rb:9-31, parse
-  * tests test_out_rewrite_tag_filter.rb:13-58). A user migrating such a
-  * config needs a loader, not Scala case-class literals. Three formats:
+  * (out_rewrite_tag_filter.rb:9-31, parse tests
+  * test_out_rewrite_tag_filter.rb:13-58). A user migrating such a
+  * config needs a loader, not Scala case-class literals. One format:
+  * [[fromConf]] reads the Fluentd-style text itself (`<rule>` blocks,
+  * `param value` lines, `#` comments), including the reference's
+  * ConfigError surface: legacy `rewriterule<n>` rejection (:52-54),
+  * unknown-param rejection, `/re/` regexp_type patterns (:24).
   *
-  *  1. [[fromConf]] — the Fluentd-style text format itself (`<rule>` blocks,
-  *     `param value` lines, `#` comments), including the reference's
-  *     ConfigError surface: legacy `rewriterule<n>` rejection (:52-54),
-  *     unknown-param rejection, `/re/` regexp_type patterns (:24).
-  *  2. [[fromJson]] — the same surface as one JSON document (rules array is
-  *     ordered; JSON arrays preserve order).
-  *  3. [[fromDataFrame]] — a rule table stored AS DATA (e.g. a parquet/JDBC
-  *     table of routing rules); requires an explicit `rule_order` column
-  *     because DataFrames have no row order.
-  *
-  * Loaders only PARSE; semantic validation (≥1 rule, duplicate rules,
+  * The loader only PARSES; semantic validation (≥1 rule, duplicate rules,
   * prefix∧regexp exclusion, template ranges) stays in RuleCompiler.compileFused —
   * same split as the reference (config_param parse vs configure checks).
   *
@@ -31,7 +20,7 @@ import org.apache.spark.sql.DataFrame
   */
 object RuleTableLoader {
 
-  /** Top-level params every format accepts. */
+  /** Top-level params of a conf file. */
   private val topLevelParams = Set(
     "capitalize_regex_backreference", "remove_tag_prefix", "remove_tag_regexp",
     "hostname", "hostname_command", "emit_mode")
@@ -92,9 +81,7 @@ object RuleTableLoader {
     new String(buf.toByteArray, "UTF-8").stripLineEnd
   }
 
-  private def buildConfig(
-      params: Map[String, String],
-      allowHostnameCommand: Boolean): RoutingConfig = {
+  private def buildConfig(params: Map[String, String]): RoutingConfig = {
     params.keys.find(!topLevelParams.contains(_)).foreach { k =>
       if (k.startsWith("rewriterule"))
         // the reference's own legacy-syntax error (:52-54)
@@ -109,18 +96,7 @@ object RuleTableLoader {
         throw new RuleConfigError(s"emit_mode must be record or batch: $m")
     }
     val hostname = params.get("hostname")
-      .orElse(params.get("hostname_command").map { c =>
-        // the reference only shells out for OPERATOR conf files (backticks
-        // at configure, :40); a rule table loaded from data-plane storage
-        // (JSON documents, DataFrames) must not trigger driver-side command
-        // execution at parse time unless the caller explicitly opts in
-        if (!allowHostnameCommand)
-          throw new RuleConfigError(
-            "hostname_command executes a shell command at load time and is only honored " +
-              "in operator conf files (fromConf/fromConfFile); pass " +
-              "allowHostnameCommand = true to opt in for JSON rule tables")
-        hostnameFromCommand(c)
-      })
+      .orElse(params.get("hostname_command").map(hostnameFromCommand(_)))
       .getOrElse(RoutingConfig.defaultHostname)
     RoutingConfig(
       capitalizeRegexBackreference =
@@ -148,8 +124,6 @@ object RuleTableLoader {
       label = params.get("label").map(l => l.stripPrefix("@")),
       invert = params.get("invert").exists(parseBool))
   }
-
-  // ---- Fluentd-style conf text ---------------------------------------------
 
   /** Parse the reference's config-text shape:
     * {{{
@@ -198,86 +172,10 @@ object RuleTableLoader {
       }
     }
     if (inRule.isDefined) throw new RuleConfigError("unterminated <rule> section")
-    // operator conf files are trusted config (the reference's configure-time
-    // backticks, :40) — hostname_command is honored here
-    (rules.toSeq, buildConfig(top.toMap, allowHostnameCommand = true))
+    (rules.toSeq, buildConfig(top.toMap))
   }
 
   def fromConfFile(path: String): (Seq[Rule], RoutingConfig) =
     fromConf(new String(
       java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)), "UTF-8"))
-
-  // ---- JSON -----------------------------------------------------------------
-
-  /** One JSON document: top-level params + ordered `rules` array. Values may
-    * be native JSON booleans or strings; `label` null/absent means default
-    * namespace. `hostname_command` is REJECTED unless the caller opts in —
-    * JSON rule tables typically arrive from data-plane storage, and parsing
-    * data must not execute shell commands.
-    */
-  def fromJson(
-      text: String,
-      allowHostnameCommand: Boolean = false): (Seq[Rule], RoutingConfig) = {
-    val root = new ObjectMapper().readTree(text)
-    if (root == null || !root.isObject)
-      throw new RuleConfigError("rule-table JSON must be an object")
-    val fields = root.properties().asScala.map(e => e.getKey -> e.getValue).toMap
-    val rulesNode = fields.getOrElse("rules",
-      throw new RuleConfigError("rule-table JSON is missing 'rules'"))
-    if (!rulesNode.isArray)
-      throw new RuleConfigError("'rules' must be an array (rule order matters)")
-    def str(n: JsonNode): String = if (n.isNull) null else n.asText()
-    val top = (fields - "rules").collect {
-      case (k, v) if !v.isNull => k -> str(v)
-    }
-    val rules = rulesNode.elements().asScala.zipWithIndex.map { case (r, i) =>
-      if (!r.isObject)
-        throw new RuleConfigError(s"rules[$i] must be an object")
-      val params = r.properties().asScala.collect {
-        case e if !e.getValue.isNull => e.getKey -> str(e.getValue)
-      }.toMap
-      buildRule(params, s"rules[$i]")
-    }.toSeq
-    (rules, buildConfig(top, allowHostnameCommand))
-  }
-
-  def fromJsonFile(
-      path: String,
-      allowHostnameCommand: Boolean = false): (Seq[Rule], RoutingConfig) =
-    fromJson(new String(
-      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)), "UTF-8"),
-      allowHostnameCommand)
-
-  // ---- DataFrame -------------------------------------------------------------
-
-  /** Rule table stored as data: columns `rule_order, key, pattern, tag` plus
-    * optional `label`, `invert`. Rule tables are config-sized (the reference
-    * caps practical tables at hundreds of rules), so collecting to the driver
-    * is the correct plan — rules compile into the physical plan as literals.
-    */
-  def fromDataFrame(df: DataFrame): Seq[Rule] = {
-    val cols = df.columns.toSet
-    Seq("rule_order", "key", "pattern", "tag").foreach(c =>
-      if (!cols.contains(c))
-        throw new RuleConfigError(s"rule-table DataFrame is missing column '$c'"))
-    val collected = df.orderBy("rule_order").collect().toSeq
-    // rule_order IS the first-match order — a duplicate would make the
-    // cascade winner depend on an unstable sort
-    val orderVals = collected.map(r => r.get(r.fieldIndex("rule_order")))
-    if (orderVals.distinct.length != orderVals.length)
-      throw new RuleConfigError(
-        s"duplicate rule_order values in rule-table DataFrame: $orderVals")
-    collected.map { row =>
-      def opt(c: String): Option[String] =
-        if (cols.contains(c) && !row.isNullAt(row.fieldIndex(c)))
-          Some(row.get(row.fieldIndex(c)).toString)
-        else None
-      Rule(
-        key = row.getAs[String]("key"),
-        pattern = row.getAs[String]("pattern"),
-        tag = row.getAs[String]("tag"),
-        label = opt("label").map(_.stripPrefix("@")),
-        invert = opt("invert").exists(v => parseBool(v)))
-    }
-  }
 }

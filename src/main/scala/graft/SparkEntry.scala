@@ -884,22 +884,22 @@ object SparkEntry {
     }),
 
     // multimodal: REAL codec — synthesized 24-bit BMPs decoded through the
-    // batched per-partition interface (magic, LE header fields, stride
+    // per-partition decode interface (magic, LE header fields, stride
     // padding, bottom-up rows); the oracle recomputes width/height/pixel
     // sum from the generation parameters in closed form
     "q_mm_bmp_decode" -> ((s, dir) => {
-      val media = Multimodal.bmpTable(s, docs(s, dir))
-      Multimodal.decodeBmpMeta(s, media).toDF()
+      val media = Multimodal.mediaTable(s, docs(s, dir), Multimodal.synthesizeBmp)
+      Multimodal.decodeMeta(media, Multimodal.decodeBmp).toDF()
         .select(col("doc_id"), col("width").cast("long").as("width"),
           col("height").cast("long").as("height"), col("pixel_sum"))
     }),
 
     // multimodal: second real codec — binary PPM/P6 (ASCII header with
     // comments, top-down unpadded raster: a deliberately different byte
-    // layout from BMP) through the same batched decode interface
+    // layout from BMP) through the same per-partition decode interface
     "q_mm_ppm_decode" -> ((s, dir) => {
-      val media = Multimodal.ppmTable(s, docs(s, dir))
-      Multimodal.decodePpmMeta(s, media).toDF()
+      val media = Multimodal.mediaTable(s, docs(s, dir), Multimodal.synthesizePpm)
+      Multimodal.decodeMeta(media, Multimodal.decodePpm).toDF()
         .select(col("doc_id"), col("width").cast("long").as("width"),
           col("height").cast("long").as("height"), col("pixel_sum"))
     }),
@@ -909,8 +909,8 @@ object SparkEntry {
     // javax.imageio: a decoder we did NOT write, so the oracle certifies
     // our byte layout and an independent codec agree pixel-for-pixel
     "q_mm_png_decode" -> ((s, dir) => {
-      val media = Multimodal.pngTable(s, docs(s, dir))
-      Multimodal.decodeImageMeta(s, media).toDF()
+      val media = Multimodal.mediaTable(s, docs(s, dir), Multimodal.synthesizePng)
+      Multimodal.decodeMeta(media, Multimodal.decodeImage).toDF()
         .select(col("doc_id"), col("width").cast("long").as("width"),
           col("height").cast("long").as("height"), col("pixel_sum"))
     }),
@@ -921,8 +921,8 @@ object SparkEntry {
     // the oracle certifies our byte layout and the JDK's WAV reader agree
     // on every sample
     "q_mm_wav_decode" -> ((s, dir) => {
-      val media = Multimodal.wavTable(s, docs(s, dir))
-      Multimodal.decodeWavMeta(s, media).toDF()
+      val media = Multimodal.mediaTable(s, docs(s, dir), Multimodal.synthesizeWav)
+      Multimodal.decodeMeta(media, Multimodal.decodeWav).toDF()
         .select(col("doc_id"), col("sample_rate"), col("n_samples"),
           col("duration_us"), col("sum_abs"), col("sum_signed"))
     }),

@@ -10,6 +10,7 @@ import scala.util.matching.Regex
   * :147-171) as a single segmentation, evaluated segment-independently:
   *
   *   - `$<digits>`                  → Backref(n)      (multi-digit, e.g. $10)
+  *                                    or UnkeyedBackref (`$01`, past Int)
   *   - `${name}` / `${name[i]}`     → Tag / TagPart(i) / Hostname / Unknown
   *   - `__NAME__`                   → Tag / Hostname / Unknown
   *   - anything else                → Lit
@@ -35,6 +36,11 @@ object TemplateParser {
     * literal `$n` text there.
     */
   final case class Backref(n: Int) extends Segment
+  /** `$<digits>` that is not `"$" + n` for an Int n (`$01`, `$99999999999`):
+    * never a key of the reference's `{"$1"=>…}` table (:147-153), so it
+    * renders "" in a normal rule and its raw text in an inverted one.
+    */
+  final case class UnkeyedBackref(raw: String) extends Segment
   /** `${tag}` / `__TAG__` — the (stripped) incoming tag (:161-162). */
   case object TagPh extends Segment
   /** `${tag_parts[i]}` — i-th dot-segment of the stripped tag (:165-168). */
@@ -74,7 +80,10 @@ object TemplateParser {
             case tagPartForm(i)                 => TagPart(i.toInt)
             case other                          => UnknownPh(other)
           }
-        case _ => Backref(t.substring(1).toInt)
+        case _ =>
+          val digits = t.substring(1)
+          digits.toIntOption.filter(_.toString == digits)
+            .fold[Segment](UnkeyedBackref(t))(Backref(_))
       })
       pos = m.end
     }

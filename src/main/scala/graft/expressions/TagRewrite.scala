@@ -194,6 +194,8 @@ final case class CompiledRuleTable(
               else sb.append(g)
             }
           } // $0 / out-of-range → "" (absent gsub-table key)
+        case UnkeyedBackref(raw) =>
+          if (m == null) sb.append(raw) // inverted: literal; else "" (no key)
         case TagPh        => sb.append(strippedTag())
         case TagPart(idx) => sb.append(tagPart(idx))
         case HostnamePh   => sb.append(hostname)

@@ -1,19 +1,20 @@
 package graft.multimodal
 
+import scala.reflect.runtime.universe.TypeTag
+
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 
 /** Multimodal-column plumbing: image/audio/video payloads as opaque
-  * `binary` columns with typed metadata, plus decode / feature-extract /
-  * frame-sample stages.
+  * `binary` columns, plus per-partition decode and feature-extract stages.
   *
-  * The Spark-side plumbing (schema, partitioning, batched per-partition
-  * processing, output shape) is real and tested. IMAGE decode is real too:
-  * three codecs — 24-bit BMP and binary PPM parsed from their public byte
-  * layouts, plus PNG/JPEG/GIF through the JDK's javax.imageio — feed both
-  * the metadata queries and [[decodeFeatures]]. AUDIO decode is real too:
+  * The Spark-side plumbing (schema, per-partition processing, output
+  * shape) is real and tested. IMAGE decode is real too: three codecs —
+  * 24-bit BMP and binary PPM parsed from their public byte layouts, plus
+  * PNG/JPEG/GIF through the JDK's javax.imageio — feed both the metadata
+  * queries ([[decodeMeta]]) and [[decodeFeatures]]. AUDIO decode is real too:
   * PCM WAV through javax.sound.sampled ([[decodeWav]]). Only payloads
-  * with no JDK codec at all (video; this container ships no media
+  * with no JDK codec at all (video; the build ships no media
   * libraries) fall back to the clearly-marked deterministic
   * [[decodeStub]]; swapping it for a JNI/javacv decoder changes no
   * plumbing.
@@ -46,52 +47,48 @@ object Multimodal {
         (pmod(crc32(encode(col(textCol), "UTF-8")), lit(3)) + 1).cast("int")).as("media_type"),
       octet_length(encode(col(textCol), "UTF-8")).cast("long").as("n_bytes"))
 
-  /** Columnar metadata extraction — pure expressions over the binary
-    * payload (what a header-sniff would yield; here derived from CRC for
-    * determinism).
-    */
-  def withMetadata(media: DataFrame): DataFrame =
-    media
-      .withColumn("width", (lit(160) + pmod(crc32(col("media")), lit(1280))).cast("int"))
-      .withColumn("height", (lit(120) + pmod(crc32(reverse(col("media"))), lit(720))).cast("int"))
-      .withColumn("duration_ms",
-        when(col("media_type") === "image", lit(0L))
-          .otherwise(col("n_bytes") * 40L))
-
-  /** Frame sampling: every k-th byte-slice of the payload as a "frame"
-    * (array<binary>), via a SQL lambda — shows the real slicing plumbing
-    * (uniform temporal sampling) over binary data.
-    */
-  def sampleFrames(media: DataFrame, nFrames: Int = 4, frameLen: Int = 16): DataFrame =
-    media.withColumn("frames",
-      expr(s"transform(sequence(0, $nFrames - 1), " +
-        s"i -> substring(media, 1 + i * int(greatest(n_bytes div $nFrames, 1)), $frameLen))"))
-
-  /** Batched per-partition decode + feature extraction — the Scala analog
-    * of `mapInPandas`: rows stream through in fixed-size batches (the shape
-    * a vectorized codec wants), one decoder instance per partition (the
-    * expensive init happens once per task, not once per row).
+  /** Per-partition decode + feature extraction — the Scala analog of
+    * `mapInPandas`: each row's payload goes through [[decodeAuto]] into a
+    * `featureDim`-wide feature vector.
     */
   def decodeFeatures(
       spark: SparkSession,
       media: DataFrame,
-      batchSize: Int = 64,
       featureDim: Int = 8): Dataset[MediaFeatures] = {
     import spark.implicits._
     media.select("doc_id", "media", "media_type", "n_bytes").as[MediaRow]
-      .mapPartitions { it =>
-        // per-partition "decoder" init would go here (e.g. codec handles)
-        it.grouped(batchSize).flatMap { batch =>
-          batch.map { row =>
-            MediaFeatures(
-              row.doc_id,
-              row.media_type,
-              decodeAuto(row.media, featureDim),
-              n_frames = math.max(1, (row.n_bytes / 1024L).toInt))
-          }
-        }
-      }
+      .mapPartitions(_.map { row =>
+        MediaFeatures(
+          row.doc_id,
+          row.media_type,
+          decodeAuto(row.media, featureDim),
+          n_frames = math.max(1, (row.n_bytes / 1024L).toInt))
+      })
   }
+
+  /** Deterministic media table from a frame's `doc_id` column: the payload
+    * of doc `id` is `synthesize(id)` ([[synthesizeBmp]], [[synthesizePpm]],
+    * [[synthesizePng]], [[synthesizeWav]]). The fixture generator of the
+    * codec queries; a real pipeline reads `binaryFile` sources into this
+    * `(doc_id, media)` shape.
+    */
+  def mediaTable(
+      spark: SparkSession, ids: DataFrame, synthesize: Long => Array[Byte]): DataFrame = {
+    import spark.implicits._
+    ids.select(col("doc_id").cast("long")).as[Long]
+      .mapPartitions(_.map(id => (id, synthesize(id))))
+      .toDF("doc_id", "media")
+  }
+
+  /** Per-partition decode of a `(doc_id, media)` frame into typed metadata
+    * rows through one real codec ([[decodeBmp]], [[decodePpm]],
+    * [[decodeImage]] or [[decodeWav]]).
+    */
+  def decodeMeta[T <: Product : TypeTag](
+      media: DataFrame, decode: (Long, Array[Byte]) => T): Dataset[T] =
+    media.select(col("doc_id").cast("long"), col("media"))
+      .as(Encoders.tuple(Encoders.scalaLong, Encoders.BINARY))
+      .mapPartitions(_.map { case (id, bytes) => decode(id, bytes) })(Encoders.product[T])
 
   /** Real-first decode: payloads carrying a JDK-decodable image magic
     * (PNG / JPEG / GIF / BMP) decode through javax.imageio and yield
@@ -135,17 +132,7 @@ object Multimodal {
     else {
       val w = img.getWidth
       val h = img.getHeight
-      var r = 0L; var g = 0L; var bl = 0L
-      var y = 0
-      while (y < h) {
-        var x = 0
-        while (x < w) {
-          val p = img.getRGB(x, y)
-          r += (p >> 16) & 0xff; g += (p >> 8) & 0xff; bl += p & 0xff
-          x += 1
-        }
-        y += 1
-      }
+      val (r, g, bl) = rgbSums(img)
       val n = w.toLong * h
       val head = Array(
         w.toFloat / 4096f, h.toFloat / 4096f,
@@ -169,7 +156,7 @@ object Multimodal {
   // ---- real codec: 24-bit BMP (public Windows-bitmap spec) -----------------
   //
   // One format decodable in pure JVM from its published byte layout — it
-  // proves the batched per-partition decode interface holds under a REAL
+  // proves the per-partition decode interface holds under a REAL
   // byte layout (magic, little-endian header fields, stride padding,
   // bottom-up rows), not just the deterministic fake above.
 
@@ -400,6 +387,22 @@ object Multimodal {
     javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
   }
 
+  /** Per-channel (R, G, B) sums over every pixel of `img`. */
+  private def rgbSums(img: java.awt.image.BufferedImage): (Long, Long, Long) = {
+    var r = 0L; var g = 0L; var b = 0L
+    var y = 0
+    while (y < img.getHeight) {
+      var x = 0
+      while (x < img.getWidth) {
+        val p = img.getRGB(x, y)
+        r += (p >> 16) & 0xff; g += (p >> 8) & 0xff; b += p & 0xff
+        x += 1
+      }
+      y += 1
+    }
+    (r, g, b)
+  }
+
   /** Real decode of any JDK-decodable image payload (PNG, JPEG, BMP, GIF)
     * via javax.imageio; sums R+G+B over all pixels. Reuses [[BmpMeta]]
     * (bpp reported as 24 — the RGB channel model this pipeline extracts).
@@ -407,20 +410,8 @@ object Multimodal {
   def decodeImage(id: Long, bytes: Array[Byte]): BmpMeta = {
     val img = readImage(bytes)
     require(img != null, s"payload is not a JDK-decodable image (doc $id)")
-    val w = img.getWidth
-    val h = img.getHeight
-    var sum = 0L
-    var y = 0
-    while (y < h) {
-      var x = 0
-      while (x < w) {
-        val rgb = img.getRGB(x, y)
-        sum += ((rgb >> 16) & 0xff) + ((rgb >> 8) & 0xff) + (rgb & 0xff)
-        x += 1
-      }
-      y += 1
-    }
-    BmpMeta(id, w, h, 24, sum)
+    val (r, g, b) = rgbSums(img)
+    BmpMeta(id, img.getWidth, img.getHeight, 24, r + g + b)
   }
 
   /** Deterministic JPEG payload (JDK encoder): the lossy twin for
@@ -444,66 +435,6 @@ object Multimodal {
     require(javax.imageio.ImageIO.write(img, "jpg", bos),
       s"JDK JPEG writer unavailable (doc $id)")
     bos.toByteArray
-  }
-
-  /** PNG twin of [[bmpTable]]. */
-  def pngTable(spark: SparkSession, ids: DataFrame, idCol: String = "doc_id"): DataFrame = {
-    import spark.implicits._
-    ids.select(col(idCol).cast("long")).as[Long]
-      .mapPartitions(_.map(id => (id, synthesizePng(id))))
-      .toDF("doc_id", "media")
-  }
-
-  /** ImageIO twin of [[decodeBmpMeta]] — same batched per-partition
-    * plumbing, real third-party (JDK) codec.
-    */
-  def decodeImageMeta(
-      spark: SparkSession, media: DataFrame, batchSize: Int = 64): Dataset[BmpMeta] = {
-    import spark.implicits._
-    media.select(col("doc_id").cast("long"), col("media")).as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.grouped(batchSize).flatMap(_.map { case (id, bytes) => decodeImage(id, bytes) })
-      }
-  }
-
-  /** Deterministic BMP media table from a frame's id column — the fixture
-    * generator (a real pipeline reads `binaryFile` sources into this shape).
-    */
-  def bmpTable(spark: SparkSession, ids: DataFrame, idCol: String = "doc_id"): DataFrame = {
-    import spark.implicits._
-    ids.select(col(idCol).cast("long")).as[Long]
-      .mapPartitions(_.map(id => (id, synthesizeBmp(id))))
-      .toDF("doc_id", "media")
-  }
-
-  /** P6 twin of [[bmpTable]]. */
-  def ppmTable(spark: SparkSession, ids: DataFrame, idCol: String = "doc_id"): DataFrame = {
-    import spark.implicits._
-    ids.select(col(idCol).cast("long")).as[Long]
-      .mapPartitions(_.map(id => (id, synthesizePpm(id))))
-      .toDF("doc_id", "media")
-  }
-
-  /** P6 twin of [[decodeBmpMeta]] — same batched per-partition plumbing. */
-  def decodePpmMeta(
-      spark: SparkSession, media: DataFrame, batchSize: Int = 64): Dataset[BmpMeta] = {
-    import spark.implicits._
-    media.select(col("doc_id").cast("long"), col("media")).as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.grouped(batchSize).flatMap(_.map { case (id, bytes) => decodePpm(id, bytes) })
-      }
-  }
-
-  /** Batched per-partition BMP decode over a (doc_id, media) frame — the
-    * same plumbing shape as [[decodeFeatures]], through the real codec.
-    */
-  def decodeBmpMeta(
-      spark: SparkSession, media: DataFrame, batchSize: Int = 64): Dataset[BmpMeta] = {
-    import spark.implicits._
-    media.select(col("doc_id").cast("long"), col("media")).as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.grouped(batchSize).flatMap(_.map { case (id, bytes) => decodeBmp(id, bytes) })
-      }
   }
 
   // ---- real codec #4: WAV / PCM audio via the JDK's javax.sound ------------
@@ -596,25 +527,5 @@ object Multimodal {
       }
       WavMeta(id, rate, n, n * 1000000L / rate, sumAbs, sumSigned)
     } finally in.close()
-  }
-
-  /** WAV twin of [[bmpTable]]. */
-  def wavTable(spark: SparkSession, ids: DataFrame, idCol: String = "doc_id"): DataFrame = {
-    import spark.implicits._
-    ids.select(col(idCol).cast("long")).as[Long]
-      .mapPartitions(_.map(id => (id, synthesizeWav(id))))
-      .toDF("doc_id", "media")
-  }
-
-  /** WAV twin of [[decodeBmpMeta]] — same batched per-partition plumbing,
-    * real third-party (JDK) codec.
-    */
-  def decodeWavMeta(
-      spark: SparkSession, media: DataFrame, batchSize: Int = 64): Dataset[WavMeta] = {
-    import spark.implicits._
-    media.select(col("doc_id").cast("long"), col("media")).as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.grouped(batchSize).flatMap(_.map { case (id, bytes) => decodeWav(id, bytes) })
-      }
   }
 }

@@ -51,7 +51,8 @@ class FlagshipSpec extends AnyFunSuite {
 
   test("token arrays pass through routing byte-identical") {
     val df = Synth.sequences(spark, 1000)
-    val routed = Pipelines.routedEnriched(spark, df)
+    val routed = Router.enrich(
+      Router.route(df, Pipelines.flagshipPlan(df)), Pipelines.tagLookup(spark))
     val orig = df.select("doc_id", "tokens").collect()
       .map(r => r.getString(0) -> r.getSeq[Int](1)).toMap
     val out = routed.select("doc_id", "tokens").collect()
@@ -64,7 +65,8 @@ class FlagshipSpec extends AnyFunSuite {
 
   test("enrichment join is broadcast and attaches lookup attrs") {
     val df = Synth.sequences(spark, 1000)
-    val routed = Pipelines.routedEnriched(spark, df)
+    val routed = Router.enrich(
+      Router.route(df, Pipelines.flagshipPlan(df)), Pipelines.tagLookup(spark))
     val plan = routed.queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"), s"expected broadcast join in:\n$plan")
     val apache = routed.filter(col("new_tag") === "site.apache.access")
@@ -121,7 +123,11 @@ class FlagshipSpec extends AnyFunSuite {
 
   test("flagship metrics triple") {
     val df = Synth.sequences(spark, 2000)
-    val (counts, metrics) = Pipelines.flagshipWithMetrics(spark, df)
+    val obs = org.apache.spark.sql.Observation()
+    val routed = Router.routeObserved(df, Pipelines.flagshipPlan(df), obs)
+    val counts = Router.enrichCounts(Router.sinkCounts(routed), Pipelines.tagLookup(spark))
+      .collect()
+    val metrics = obs.get
     assert(metrics("emitted") == 2000L)
     val matched = metrics("matched").asInstanceOf[Long]
     val unmatched = metrics("unmatched").asInstanceOf[Long]

@@ -344,6 +344,27 @@ class RoutingGoldenSpec extends AnyFunSuite {
     assert(routedMap(df, rules)(0)._1 == "no_match.$1")
   }
 
+  // --- `$digits` the backreference table has no key for (:127-128,
+  // :147-153): the table holds "$1".."$n" only, so "$01", "$0" and a number
+  // past any group index are absent keys. Engine and oracle both checked.
+  private val unkeyedTemplate = "a.$01.$0.$99999999999.$1"
+
+  test("unkeyed $digits render empty in a normal rule") {
+    val rules = Seq(Rule("domain", "^(x)$", unkeyedTemplate))
+    val df = frame(Seq("domain"), "input", Seq(Seq("x")))
+    assert(routedMap(df, rules)(0)._1 == "a....x")
+    assert(Oracle.route(rules, RoutingConfig(), "input", Map("domain" -> "x")) ==
+      Some(("a....x", None)))
+  }
+
+  test("unkeyed $digits stay literal in an inverted rule") {
+    val rules = Seq(Rule("domain", "^zzz$", unkeyedTemplate, invert = true))
+    val df = frame(Seq("domain"), "input", Seq(Seq("x")))
+    assert(routedMap(df, rules)(0)._1 == unkeyedTemplate)
+    assert(Oracle.route(rules, RoutingConfig(), "input", Map("domain" -> "x")) ==
+      Some((unkeyedTemplate, None)))
+  }
+
   // --- pattern forms (:21-43): /re/-delimited and bare are equivalent -----
   test("pattern accepts /re/ and bare forms (regexp_type surface)") {
     val df = frame(Seq("message"), "input", Seq(

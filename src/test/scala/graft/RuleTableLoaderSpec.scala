@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** C-PARSE surface: rule tables loaded from Fluentd-shape conf text, JSON,
-  * and DataFrames, with the reference's ConfigError behavior
+/** C-PARSE surface: rule tables loaded from Fluentd-shape conf text, with
+  * the reference's ConfigError behavior
   * (test_out_rewrite_tag_filter.rb:13-58 parse tests, :169-186 hostname).
   */
 class RuleTableLoaderSpec extends AnyFunSuite {
@@ -48,41 +48,6 @@ class RuleTableLoaderSpec extends AnyFunSuite {
     assert(rules.head.normalizedPattern == "^ERROR #\\d+$")
   }
 
-  test("JSON: same surface, order preserved, null label") {
-    val (rules, cfg) = RuleTableLoader.fromJson(
-      """{"remove_tag_regexp": "^app\\.",
-        |  "hostname": "json-host",
-        |  "rules": [
-        |    {"key": "a", "pattern": "x", "tag": "t1"},
-        |    {"key": "b", "pattern": "y", "tag": "t2", "label": "L", "invert": true},
-        |    {"key": "c", "pattern": "z", "tag": "t3", "label": null}
-        |  ]}""".stripMargin)
-    assert(cfg.removeTagRegexp.contains("^app\\."))
-    assert(cfg.hostname == "json-host")
-    assert(rules.map(_.key) == Seq("a", "b", "c"))
-    assert(rules(1) == Rule("b", "y", "t2", label = Some("L"), invert = true))
-    assert(rules(2).label.isEmpty)
-  }
-
-  test("DataFrame: explicit rule_order drives rule order") {
-    import spark.implicits._
-    val df = Seq(
-      (2, "k2", "p2", "t2", Some("L2"), Some("true")),
-      (1, "k1", "p1", "t1", None, None),
-      (3, "k3", "p3", "t3", None, Some("false")))
-      .toDF("rule_order", "key", "pattern", "tag", "label", "invert")
-    val rules = RuleTableLoader.fromDataFrame(df)
-    assert(rules.map(_.key) == Seq("k1", "k2", "k3"))
-    assert(rules(1) == Rule("k2", "p2", "t2", label = Some("L2"), invert = true))
-    val noOrder = df.drop("rule_order")
-    assertThrows[RuleConfigError](RuleTableLoader.fromDataFrame(noOrder))
-    // duplicate order = nondeterministic first-match winner → rejected
-    val dup = Seq(
-      (1, "k1", "p1", "tA"), (1, "k1", "p1x", "tB"))
-      .toDF("rule_order", "key", "pattern", "tag")
-    assertThrows[RuleConfigError](RuleTableLoader.fromDataFrame(dup))
-  }
-
   test("legacy rewriterule<n> syntax is rejected with the reference's error") {
     val e = intercept[RuleConfigError](RuleTableLoader.fromConf(
       "rewriterule1 domain ^www\\..+$ site.rewritten"))
@@ -98,8 +63,6 @@ class RuleTableLoaderSpec extends AnyFunSuite {
     assertThrows[RuleConfigError](RuleTableLoader.fromConf("<rule>\n key k"))
     assertThrows[RuleConfigError](RuleTableLoader.fromConf(
       "emit_mode sideways\n<rule>\n key k\n pattern p\n tag t\n</rule>"))
-    assertThrows[RuleConfigError](RuleTableLoader.fromJson("""{"rules": {}}"""))
-    assertThrows[RuleConfigError](RuleTableLoader.fromJson("""{}"""))
   }
 
   test("hostname_command runs once on the driver with chomp semantics") {
@@ -144,23 +107,6 @@ class RuleTableLoaderSpec extends AnyFunSuite {
       case e: RuleConfigError =>
         assert(e.getMessage.contains("stdout stayed open"))
     }
-  }
-
-  test("hostname_command in JSON rule tables requires an explicit opt-in") {
-    // a rule table loaded from data-plane storage must not execute shell
-    // commands at parse time (the reference only shells out for operator
-    // conf files — backticks at configure)
-    val json =
-      """{"hostname_command": "echo pwned",
-        | "rules": [{"key": "k", "pattern": "p", "tag": "t"}]}""".stripMargin
-    val err = intercept[RuleConfigError](RuleTableLoader.fromJson(json))
-    assert(err.getMessage.contains("hostname_command"))
-    val (_, cfg) = RuleTableLoader.fromJson(json, allowHostnameCommand = true)
-    assert(cfg.hostname == "pwned")
-    // plain hostname literals in JSON stay allowed
-    val (_, cfg2) = RuleTableLoader.fromJson(
-      """{"hostname": "h1", "rules": [{"key": "k", "pattern": "p", "tag": "t"}]}""")
-    assert(cfg2.hostname == "h1")
   }
 
   test("conf-loaded table routes identically to the literal table") {

@@ -986,37 +986,26 @@ class MultimodalSpec extends AnyFunSuite {
     ("m3", "x")).toDF("doc_id", "text")
 
   test("media table schema and deterministic metadata") {
-    val media = Multimodal.withMetadata(Multimodal.fromDocuments(docs))
+    val media = Multimodal.fromDocuments(docs)
     val rows = media.collect().map(r => r.getAs[String]("doc_id") -> r).toMap
     assert(media.schema("media").dataType.typeName == "binary")
     assert(rows("m1").getAs[Long]("n_bytes") ==
       "some text payload standing in for bytes".getBytes("UTF-8").length.toLong)
     assert(Set("image", "audio", "video").contains(rows("m1").getAs[String]("media_type")))
-    // image rows have no duration
-    rows.values.filter(_.getAs[String]("media_type") == "image")
-      .foreach(r => assert(r.getAs[Long]("duration_ms") == 0L))
     // deterministic across runs
-    val again = Multimodal.withMetadata(Multimodal.fromDocuments(docs)).collect()
-      .map(r => r.getAs[String]("doc_id") -> r.getAs[Int]("width")).toMap
-    assert(rows.view.mapValues(_.getAs[Int]("width")).toMap == again)
-  }
-
-  test("frame sampling yields n binary frames") {
-    val framed = Multimodal.sampleFrames(Multimodal.fromDocuments(docs), nFrames = 4)
-    val f = framed.filter(col("doc_id") === "m1").select("frames").collect()(0)
-      .getSeq[Array[Byte]](0)
-    assert(f.length == 4)
-    assert(f.head.nonEmpty)
+    val again = Multimodal.fromDocuments(docs).collect()
+      .map(r => r.getAs[String]("doc_id") -> r.getAs[String]("media_type")).toMap
+    assert(rows.view.mapValues(_.getAs[String]("media_type")).toMap == again)
   }
 
   test("batched decode stub: typed output, deterministic features") {
     val feats = Multimodal.decodeFeatures(spark,
-      Multimodal.fromDocuments(docs), batchSize = 2, featureDim = 8).collect()
+      Multimodal.fromDocuments(docs), featureDim = 8).collect()
     assert(feats.length == 3)
     assert(feats.forall(_.feature.length == 8))
     assert(feats.forall(_.feature.forall(v => v >= 0f && v < 1f)))
     val again = Multimodal.decodeFeatures(spark,
-      Multimodal.fromDocuments(docs), batchSize = 64, featureDim = 8).collect()
+      Multimodal.fromDocuments(docs), featureDim = 8).collect()
     assert(feats.map(f => f.doc_id -> f.feature.toSeq).toMap ==
       again.map(f => f.doc_id -> f.feature.toSeq).toMap)
   }
@@ -1104,7 +1093,8 @@ class MultimodalSpec extends AnyFunSuite {
 
   test("distributed batched imageio decode ≡ local decode") {
     val ids = (0L until 24L).toDF("doc_id")
-    val got = Multimodal.decodeImageMeta(spark, Multimodal.pngTable(spark, ids))
+    val got = Multimodal.decodeMeta(
+      Multimodal.mediaTable(spark, ids, Multimodal.synthesizePng), Multimodal.decodeImage)
       .collect().map(m => m.doc_id -> m).toMap
     for (id <- 0L until 24L)
       assert(got(id) == Multimodal.decodeImage(id, Multimodal.synthesizePng(id)))
@@ -1164,8 +1154,9 @@ class MultimodalSpec extends AnyFunSuite {
   test("distributed batched BMP decode ≡ local decode") {
     import spark.implicits._
     val ids = (0L until 40L).toDF("doc_id").repartition(5)
-    val got = Multimodal.decodeBmpMeta(spark, Multimodal.bmpTable(spark, ids),
-      batchSize = 7).collect()
+    val got = Multimodal.decodeMeta(
+      Multimodal.mediaTable(spark, ids, Multimodal.synthesizeBmp), Multimodal.decodeBmp)
+      .collect()
       .map(m => m.doc_id -> (m.width, m.height, m.pixel_sum)).toMap
     assert(got.size == 40)
     for (id <- 0L until 40L) {
@@ -1210,8 +1201,9 @@ class MultimodalSpec extends AnyFunSuite {
   test("distributed batched WAV decode ≡ local decode") {
     import spark.implicits._
     val ids = (0L until 40L).toDF("doc_id").repartition(5)
-    val got = Multimodal.decodeWavMeta(spark, Multimodal.wavTable(spark, ids),
-      batchSize = 7).collect()
+    val got = Multimodal.decodeMeta(
+      Multimodal.mediaTable(spark, ids, Multimodal.synthesizeWav), Multimodal.decodeWav)
+      .collect()
       .map(m => m.doc_id -> (m.sample_rate, m.n_samples, m.sum_abs, m.sum_signed))
       .toMap
     assert(got.size == 40)
