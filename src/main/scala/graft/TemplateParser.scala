@@ -62,6 +62,16 @@ object TemplateParser {
 
   private val tagPartForm: Regex = """\$\{tag_parts\[([0-9]+)\]\}""".r
 
+  /** `digits` as an Int n when it is exactly `n.toString`: the only keys
+    * of the reference's `$n` (:147-153) and `${tag_parts[n]}` (:165-168)
+    * tables. `$01` is an [[UnkeyedBackref]], `${tag_parts[01]}` an
+    * [[UnknownPh]]; a number past Int likewise.
+    */
+  private object CanonicalInt {
+    def unapply(digits: String): Option[Int] =
+      digits.toIntOption.filter(_.toString == digits)
+  }
+
   /** Tokenize a tag template. Throws [[RuleConfigError]] on range forms. */
   def parse(template: String): List[Segment] = {
     if (rangeForm.findFirstIn(template).isDefined)
@@ -77,12 +87,11 @@ object TemplateParser {
           t match {
             case "${tag}" | "__TAG__"           => TagPh
             case "${hostname}" | "__HOSTNAME__" => HostnamePh
-            case tagPartForm(i)                 => TagPart(i.toInt)
+            case tagPartForm(CanonicalInt(i))   => TagPart(i)
             case other                          => UnknownPh(other)
           }
         case _ =>
-          val digits = t.substring(1)
-          digits.toIntOption.filter(_.toString == digits)
+          CanonicalInt.unapply(t.substring(1))
             .fold[Segment](UnkeyedBackref(t))(Backref(_))
       })
       pos = m.end

@@ -3,7 +3,6 @@ package graft.dedup
 import graft.Lineage
 import graft.sources.BucketedIO
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Persisted sealed-corpus artifacts for the INCREMENTAL dedup family —
   * the piece that turns "nightly ingest re-derives the corpus tables every
@@ -24,11 +23,11 @@ import org.apache.spark.sql.functions._
   * TableIOSpec, with values differentially pinned to the recompute-always
   * operators.
   *
-  * The probes reuse the exact projection definitions of the batch family
-  * ([[Dedup.fastShingleSets]] / [[Dedup.fastBandKeys]] / [[Dedup.fpKey]]),
-  * so the hash family an artifact stores and the one a probe computes
-  * cannot drift; [[NearDupSpec]] pins the numeric parameters the two sides
-  * must share.
+  * The tables and probes are the batch family's own ([[Dedup.exactKeeperTable]]
+  * / [[Dedup.incrementalExactProbe]], [[Dedup.XxHashFamily]] /
+  * [[Dedup.corpusBandTable]] / [[Dedup.incrementalNearDupCore]]), fed a
+  * stored table instead of an inline one, so an artifact and a probe
+  * cannot drift; [[NearDupSpec]] pins the parameters both must share.
   */
 object CorpusArtifacts {
 
@@ -45,10 +44,10 @@ object CorpusArtifacts {
   }
 
   /** Write the sealed corpus's exact-dedup fingerprint table: one
-    * (text_fp, corpus_keeper) row per distinct text (keeper = min id,
-    * [[Dedup.exact]]'s election), bucketed on the primitive-long
-    * fingerprint. The corpus text reduces through ONE partial+final
-    * aggregate at write time and never shuffles again.
+    * (text_fp, corpus_keeper) row per distinct text ([[Dedup.exactKeeperTable]],
+    * keeper = min id), bucketed on the primitive-long fingerprint. The
+    * corpus text reduces through ONE partial+final aggregate at write time
+    * and never shuffles again.
     */
   def writeExactFingerprints(
       corpus: DataFrame,
@@ -56,36 +55,24 @@ object CorpusArtifacts {
       path: String,
       buckets: Int,
       idCol: String = "doc_id",
-      textCol: String = "text"): Unit = {
-    val seen = corpus
-      .select(Dedup.fpKey(textCol).as("text_fp"), col(idCol).as("corpus_keeper"))
-      .groupBy("text_fp").agg(min("corpus_keeper").as("corpus_keeper"))
-    BucketedIO.writeBucketed(seen, tableName, path, buckets, Seq("text_fp"))
-  }
+      textCol: String = "text"): Unit =
+    BucketedIO.writeBucketed(Dedup.exactKeeperTable(corpus, idCol, textCol, "text_fp"),
+      tableName, path, buckets, Seq("text_fp"))
 
   /** [[Dedup.incrementalExact]] against a prepared fingerprint table
-    * ([[writeExactFingerprints]] output, read via [[BucketedIO.readTable]]).
-    * Same contract: newDocs + (corpus_keeper: keeper id or -1, in_corpus).
-    * With the bucketed table, the join's corpus side is exchange-free —
-    * only the increment's (rows × one long) shuffles into the bucket
-    * layout.
+    * ([[writeExactFingerprints]] output, read via [[BucketedIO.readTable]]),
+    * through the same probe. Same contract: newDocs + (corpus_keeper:
+    * keeper id or -1, in_corpus). With the bucketed table, the join's
+    * corpus side is exchange-free — only the increment's (rows × one long)
+    * shuffles into the bucket layout.
     */
   def incrementalExactPrepared(
       newDocs: DataFrame,
       fpTable: DataFrame,
       idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
-    // freshName hardening (r5 ADVICE): an increment frame already carrying
-    // __fp must not be clobbered. (fpTable's text_fp/corpus_keeper names
-    // are the artifact's documented fixed schema.)
-    val fpC = Dedup.freshName(newDocs, "__fp")
-    newDocs.withColumn(fpC, Dedup.fpKey(textCol))
-      .join(fpTable, col(fpC) === col("text_fp"), "left")
-      .withColumn("in_corpus", col("corpus_keeper").isNotNull)
-      .withColumn("corpus_keeper", coalesce(col("corpus_keeper"),
-        lit(-1L).cast(newDocs.schema(idCol).dataType)))
-      .drop(fpC, "text_fp")
-  }
+      textCol: String = "text"): DataFrame =
+    Dedup.incrementalExactProbe(newDocs, idCol, textCol,
+      fpTable.withColumnRenamed("text_fp", _))
 
   /** Write the sealed corpus's near-dup artifacts (production xxhash64
     * family, parameters from `spec`):
@@ -120,31 +107,26 @@ object CorpusArtifacts {
 
   /** The two corpus-side frames the near-dup artifacts persist —
     * (band table (band_key, id_c) with the saturation cap baked in,
-    * shingle-set table (id_c, sh)) — as unpersisted plans: ONE definition
-    * shared by [[writeNearDupArtifacts]] and the convenience faces that
-    * compute them inline, so the stored and recomputed tables cannot
-    * drift.
+    * shingle-set table (id_c, sh)) — as unpersisted plans: the same
+    * tables [[Dedup.incrementalNearDupPairsFast]] builds inline, so the
+    * stored and recomputed tables cannot drift.
     */
   def nearDupCorpusTables(
       corpus: DataFrame,
       spec: NearDupSpec,
       idCol: String = "doc_id",
       textCol: String = "text"): (DataFrame, DataFrame) = {
-    val sets = Dedup.fastShingleSets(corpus, idCol, "id_c", textCol, spec.shingleSize)
-    val bandTable = Dedup.fastBandKeys(sets, "id_c", spec.numHashes, spec.bands)
-      .groupBy("band_key")
-      .agg(graft.expressions.CappedCollectList(col("id_c"), spec.maxBucket + 1).as("ids"))
-      .filter(size(col("ids")) <= spec.maxBucket)
-      .select(col("band_key"), explode(col("ids")).as("id_c"))
-    (bandTable, sets)
+    val sets = Dedup.XxHashFamily.sets(corpus, idCol, "id_c", textCol, spec)
+    (Dedup.corpusBandTable(Dedup.XxHashFamily, sets, spec), sets)
   }
 
   /** [[Dedup.incrementalNearDupPairsFast]] against prepared artifacts —
-    * same output contract ((idCol, corpus_id, jaccard_ppm), verified
-    * pairs only), same asymmetry (corpus-internal pairs never
-    * materialize). The two corpus-side joins (band probe on band_key,
-    * verification on id_c) run with ZERO exchange above the bucketed
-    * scans; only the increment's band keys and candidate rows shuffle.
+    * the same probe, the stored sets as its verify side. Same output
+    * contract ((idCol, corpus_id, jaccard_ppm), verified pairs only), same
+    * asymmetry (corpus-internal pairs never materialize). The two
+    * corpus-side joins (band probe on band_key, verification on id_c) run
+    * with ZERO exchange above the bucketed scans; only the increment's
+    * band keys and candidate rows shuffle.
     *
     * @param bandTable `<prefix>_bands` via [[BucketedIO.readTable]]
     * @param setsTable `<prefix>_sets` via [[BucketedIO.readTable]]
@@ -157,19 +139,9 @@ object CorpusArtifacts {
       spec: NearDupSpec,
       idCol: String = "doc_id",
       textCol: String = "text",
-      thresholdPpm: Long = 700000L): DataFrame = {
-    val newSets = Dedup.fastShingleSets(newDocs, idCol, "id_n", textCol, spec.shingleSize)
-    val candidates =
-      Dedup.fastBandKeys(newSets, "id_n", spec.numHashes, spec.bands)
-        .join(bandTable, "band_key")
-        .select("id_n", "id_c").distinct()
-    candidates
-      .join(newSets, "id_n")
-      .join(setsTable.withColumnRenamed("sh", "sh_c"), "id_c")
-      .withColumn("jaccard_ppm", Dedup.jaccardPpm(col("sh"), col("sh_c")))
-      .filter(col("jaccard_ppm") >= thresholdPpm)
-      .select(col("id_n").as(idCol), col("id_c").as("corpus_id"), col("jaccard_ppm"))
-  }
+      thresholdPpm: Long = 700000L): DataFrame =
+    Dedup.incrementalNearDupCore(newDocs, Dedup.XxHashFamily, spec, bandTable,
+      setsTable.withColumnRenamed("sh", "sh_c"), identity, idCol, textCol, thresholdPpm)
 
   /** Mine-once CLUSTER artifact: return the (id, cluster_id) table for
     * `key`, reading the persisted copy when its manifest matches

@@ -1,5 +1,6 @@
 package graft.dedup
 
+import graft.dedup.CorpusArtifacts.NearDupSpec
 import graft.textops.TextFunctions
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
@@ -220,6 +221,58 @@ object Dedup {
       .select("id_a", "id_b", "jaccard_ppm")
   }
 
+  /** One MinHash-LSH hash family: the ONE definition of a document's
+    * shingle set (signature input AND exact-Jaccard verify set) and of its
+    * band keys. Every LSH face — batch pairs, the incremental probes, the
+    * persisted artifacts, the streaming probe — takes both from here, so a
+    * stored band table and a probe's keys cannot drift.
+    */
+  private[graft] final case class MinHashFamily(
+      shingleSet: (Column, Int) => Column,
+      signature: (Column, Int) => Column,
+      bandKey: (Int, Column) => Column) {
+    /** (idAs, sh): one shingle set per document. */
+    def sets(df: DataFrame, idCol: String, idAs: String, textCol: String,
+        spec: NearDupSpec): DataFrame =
+      df.select(col(idCol).as(idAs), shingleSet(col(textCol), spec.shingleSize).as("sh"))
+
+    /** One row per (document, band): the `keep` columns of a frame carrying
+      * `sh`, plus band_key. Two-step projection so the signature
+      * materializes once per row: the band array references `mh` `bands`
+      * times, which stops CollapseProject from inlining it back into the
+      * per-band expressions (a once-referenced alias WOULD be inlined and
+      * recomputed per band).
+      */
+    def bandKeys(withSets: DataFrame, spec: NearDupSpec, keep: String*): DataFrame = {
+      val r = spec.numHashes / spec.bands
+      val kept = keep.map(col)
+      withSets.select(kept :+ signature(col("sh"), spec.numHashes).as("mh"): _*)
+        .select(kept :+ explode(array((0 until spec.bands).map(b =>
+          bandKey(b, slice(col("mh"), b * r + 1, r))): _*)).as("band_key"): _*)
+    }
+  }
+
+  /** Production family: distinct xxhash64 shingle hashes (one-pass
+    * codegen'd, differential-tested in SketchExprSpec), the
+    * [[minHashFromHashes]] signature, band key = xxhash64(the band's
+    * signature slice, band index).
+    */
+  private[graft] val XxHashFamily = MinHashFamily(
+    graft.expressions.ShingleHashes(_, _), minHashFromHashes,
+    (b, sigSlice) => xxhash64(sigSlice, lit(b)))
+
+  /** Oracle-portable family: every hash the bucketing depends on is md5,
+    * so any engine reproduces it bit-for-bit. Set = the distinct shingle
+    * STRINGS (first-occurrence order, SpanExprSpec); signature j = min over
+    * the set of hex(md5(j + ":" + s)) ([[graft.expressions.Md5MinHashSig]]);
+    * band key = band index + ":" + the band's signature values joined by
+    * "|".
+    */
+  private[graft] val Md5Family = MinHashFamily(
+    graft.expressions.ShingleStrings(_, _, wholeIfShort = true, distinct = true),
+    graft.expressions.Md5MinHashSig(_, _),
+    (b, sigSlice) => concat(lit(s"$b:"), concat_ws("|", sigSlice)))
+
   /** MinHash + LSH near-duplicate pairs.
     *
     * @param maxBucket drop LSH buckets larger than this (a degenerate value,
@@ -238,33 +291,20 @@ object Dedup {
       bands: Int = 8,
       shingleSize: Int = 3,
       thresholdPpm: Long = 700000L,
-      maxBucket: Int = 1000): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must divide into bands")
-    val r = numHashes / bands
+      maxBucket: Int = 1000): DataFrame =
+    minHashPairs(XxHashFamily, NearDupSpec(numHashes, bands, shingleSize, maxBucket),
+      df, idCol, textCol, thresholdPpm)
 
-    // distinct shingle-hash set per doc (also the exact-verify set) — the
-    // one-pass codegen'd ShingleHashes expression rather than the
-    // interpreted shingle→hash→distinct lambda chain (differential-tested
-    // equal in SketchExprSpec); evaluated once per doc here plus once per
-    // candidate SIDE in the verify (see [[verifyJaccard]])
-    val withSets = df.select(
-      col(idCol).as("id"),
-      graft.expressions.ShingleHashes(col(textCol), shingleSize).as("sh"))
-
-    // Two-step projection so the signature materializes once per row: the
-    // band array references `mh` `bands` times, which stops CollapseProject
-    // from inlining the aggregate back into the per-band expressions (a
-    // once-referenced alias WOULD be inlined and recomputed per band).
-    val withSig = withSets.select(col("id"),
-      minHashFromHashes(col("sh"), numHashes).as("mh"))
-    // one row per (doc, band); only (id, band_key) shuffles — the heavy
-    // shingle sets stay behind and are joined back for verification only
-    val banded = withSig.select(col("id"),
-      explode(array((0 until bands).map(b =>
-        xxhash64(slice(col("mh"), b * r + 1, r), lit(b))): _*)).as("band_key"))
-
-    verifyJaccard(bandedPairs(banded, maxBucket), df, idCol, textCol,
-      t => graft.expressions.ShingleHashes(t, shingleSize), thresholdPpm)
+  /** The batch body of both families: only (id, band_key) shuffles — the
+    * heavy sets stay behind and are rebuilt per candidate side in
+    * [[verifyJaccard]].
+    */
+  private def minHashPairs(
+      family: MinHashFamily, spec: NearDupSpec, df: DataFrame,
+      idCol: String, textCol: String, thresholdPpm: Long): DataFrame = {
+    val banded = family.bandKeys(family.sets(df, idCol, "id", textCol, spec), spec, "id")
+    verifyJaccard(bandedPairs(banded, spec.maxBucket), df, idCol, textCol,
+      family.shingleSet(_, spec.shingleSize), thresholdPpm)
   }
 
   /** Exact Jaccard (ppm) of two arrays (distinct-set semantics). Production
@@ -381,10 +421,8 @@ object Dedup {
   // paths only ever get rows-only checks). Plans are identical in shape:
   // only (id, band_key) shuffles, caps bound degenerate buckets.
 
-  /** [[minHashLshPairs]] under the md5 hash family (see [[graft.expressions.Md5MinHashSig]]).
-    * Signature j = min over shingle strings s of hex(md5(j + ":" + s));
-    * band key = band index + the band's r signature values; verification =
-    * exact Jaccard over the distinct shingle-STRING sets (no hashing at all).
+  /** [[minHashLshPairs]] under the md5 hash family ([[Md5Family]]):
+    * verification = exact Jaccard over the distinct shingle-STRING sets.
     */
   def minHashLshPairsPortable(
       df: DataFrame,
@@ -394,31 +432,9 @@ object Dedup {
       bands: Int = 4,
       shingleSize: Int = 3,
       thresholdPpm: Long = 700000L,
-      maxBucket: Int = 1000): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must divide into bands")
-    val r = numHashes / bands
-
-    // one-pass codegen'd distinct shingle strings (first-occurrence order,
-    // identical to array_distinct over the lambda form — SpanExprSpec)
-    val withSets = df.select(
-      col(idCol).as("id"),
-      graft.expressions.ShingleStrings(col(textCol), shingleSize,
-        wholeIfShort = true, distinct = true).as("sh"))
-
-    // signature over the DISTINCT shingle set (min is set-semantics anyway;
-    // distinct keeps the verify join input and the signature input identical)
-    val withSig = withSets.select(col("id"),
-      graft.expressions.Md5MinHashSig(col("sh"), numHashes).as("mh"))
-    val banded = withSig.select(col("id"),
-      explode(array((0 until bands).map(b =>
-        concat(lit(s"$b:"), concat_ws("|", slice(col("mh"), b * r + 1, r)))): _*))
-        .as("band_key"))
-
-    verifyJaccard(bandedPairs(banded, maxBucket), df, idCol, textCol,
-      t => graft.expressions.ShingleStrings(t, shingleSize,
-        wholeIfShort = true, distinct = true),
-      thresholdPpm)
-  }
+      maxBucket: Int = 1000): DataFrame =
+    minHashPairs(Md5Family, NearDupSpec(numHashes, bands, shingleSize, maxBucket),
+      df, idCol, textCol, thresholdPpm)
 
   /** [[simHashBits]] under the md5 hash family: word hash = first 8 bytes of
     * md5(word), big-endian (see [[graft.expressions.Md5WordHashes]]); the
@@ -1019,16 +1035,33 @@ object Dedup {
       newDocs: DataFrame,
       corpus: DataFrame,
       idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
-    val fp = fpKey(textCol)
-    // freshName hardening (r5 VERDICT #8): an input frame already carrying
-    // __fp/__cfp must not be clobbered or make the join ambiguous
+      textCol: String = "text"): DataFrame =
+    incrementalExactProbe(newDocs, idCol, textCol,
+      exactKeeperTable(corpus, idCol, textCol, _))
+
+  /** The sealed corpus's fingerprint → keeper table, one (keyAs,
+    * corpus_keeper = min id) row per distinct text through ONE
+    * partial+final aggregate: what [[incrementalExact]] joins inline and
+    * [[CorpusArtifacts.writeExactFingerprints]] persists.
+    */
+  private[dedup] def exactKeeperTable(
+      corpus: DataFrame, idCol: String, textCol: String, keyAs: String): DataFrame =
+    corpus.select(fpKey(textCol).as(keyAs), col(idCol).as("corpus_keeper"))
+      .groupBy(keyAs).agg(min("corpus_keeper").as("corpus_keeper"))
+
+  /** The exact probe behind [[incrementalExact]] and
+    * [[CorpusArtifacts.incrementalExactPrepared]]: the increment's [[fpKey]]
+    * left-joins `keepers(k)`, the keeper table with its key renamed to `k`,
+    * a name fresh in `newDocs` — an increment already carrying `__fp`,
+    * `__cfp` or `text_fp` is neither clobbered nor made ambiguous.
+    */
+  private[dedup] def incrementalExactProbe(
+      newDocs: DataFrame, idCol: String, textCol: String,
+      keepers: String => DataFrame): DataFrame = {
     val fpC = freshName(newDocs, "__fp")
     val cfpC = freshName(newDocs, "__cfp")
-    val seen = corpus.select(fp.as(cfpC), col(idCol).as("corpus_keeper"))
-      .groupBy(cfpC).agg(min("corpus_keeper").as("corpus_keeper"))
-    newDocs.withColumn(fpC, fp)
-      .join(seen, col(fpC) === col(cfpC), "left")
+    newDocs.withColumn(fpC, fpKey(textCol))
+      .join(keepers(cfpC), col(fpC) === col(cfpC), "left")
       .withColumn("in_corpus", col("corpus_keeper").isNotNull)
       .withColumn("corpus_keeper", coalesce(col("corpus_keeper"),
         lit(-1L).cast(newDocs.schema(idCol).dataType))) // sentinel in id's type
@@ -1063,28 +1096,10 @@ object Dedup {
       bands: Int = 4,
       shingleSize: Int = 3,
       thresholdPpm: Long = 700000L,
-      maxBucket: Int = 1000): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must divide into bands")
-    val r = numHashes / bands
-    def sets(df: DataFrame, idAs: String) = df.select(
-      col(idCol).as(idAs),
-      graft.expressions.ShingleStrings(col(textCol), shingleSize,
-        wholeIfShort = true, distinct = true).as("sh"))
-    // same two-step projection as the batch families: the band array
-    // references `mh` `bands` times, which stops CollapseProject from
-    // inlining (and recomputing) the signature per band
-    def bandKeys(withSets: DataFrame, idAs: String) = withSets
-      .select(col(idAs), graft.expressions.Md5MinHashSig(col("sh"), numHashes).as("mh"))
-      .select(col(idAs), explode(array((0 until bands).map(b =>
-        concat(lit(s"$b:"), concat_ws("|", slice(col("mh"), b * r + 1, r)))): _*))
-        .as("band_key"))
-    val ctxtC = freshName(newDocs, "__ctxt")
-    incrementalNearDupCore(sets(newDocs, "id_n"), sets(corpus, "id_c"),
-      corpus.select(col(idCol).as("id_c"), col(textCol).as(ctxtC)),
-      t => graft.expressions.ShingleStrings(t, shingleSize,
-        wholeIfShort = true, distinct = true),
-      bandKeys, idCol, thresholdPpm, maxBucket)
-  }
+      maxBucket: Int = 1000): DataFrame =
+    incrementalNearDupBatch(Md5Family,
+      NearDupSpec(numHashes, bands, shingleSize, maxBucket),
+      newDocs, corpus, idCol, textCol, thresholdPpm)
 
   /** [[incrementalNearDupPairs]] under the PRODUCTION xxhash64 hash family —
     * same plan shape, one codegen'd hash pass instead of one md5 per
@@ -1101,96 +1116,64 @@ object Dedup {
       bands: Int = 8,
       shingleSize: Int = 3,
       thresholdPpm: Long = 700000L,
-      maxBucket: Int = 1000): DataFrame = {
+      maxBucket: Int = 1000): DataFrame =
+    incrementalNearDupBatch(XxHashFamily,
+      NearDupSpec(numHashes, bands, shingleSize, maxBucket),
+      newDocs, corpus, idCol, textCol, thresholdPpm)
+
+  /** [[incrementalNearDupCore]] with the corpus tables built inline. The
+    * verify side attaches `(id_c, text)` and builds the set after the
+    * attach (same guide-§8 move as [[verifyJaccard]]): the corpus pays one
+    * set pass for the band table — every corpus doc must band — and only
+    * LSH-candidate corpus rows pay the verify-side set.
+    */
+  private def incrementalNearDupBatch(
+      family: MinHashFamily, spec: NearDupSpec, newDocs: DataFrame,
+      corpus: DataFrame, idCol: String, textCol: String,
+      thresholdPpm: Long): DataFrame = {
     val ctxtC = freshName(newDocs, "__ctxt")
-    incrementalNearDupCore(
-      fastShingleSets(newDocs, idCol, "id_n", textCol, shingleSize),
-      fastShingleSets(corpus, idCol, "id_c", textCol, shingleSize),
+    incrementalNearDupCore(newDocs, family, spec,
+      corpusBandTable(family, family.sets(corpus, idCol, "id_c", textCol, spec), spec),
       corpus.select(col(idCol).as("id_c"), col(textCol).as(ctxtC)),
-      t => graft.expressions.ShingleHashes(t, shingleSize),
-      fastBandKeys(_, _, numHashes, bands), idCol, thresholdPpm, maxBucket)
+      family.shingleSet(_, spec.shingleSize), idCol, textCol, thresholdPpm)
   }
 
-  /** Production (xxhash64) shingle-set projection — ONE definition shared
-    * by the batch probe, the persisted-artifact writer/reader
-    * ([[CorpusArtifacts]]) and the streaming face, so the hash family the
-    * artifact stores and the one the probe computes cannot drift.
+  /** The capped corpus band table (band_key, id_c): bounded gather per
+    * bucket, saturated buckets dropped (exact-dup territory — run
+    * incrementalExact first), re-exploded to a bounded probe table;
+    * singleton buckets stay. ONE definition for the inline probes and the
+    * persisted artifact, so the cap/saturation invariant cannot fork.
     */
-  private[graft] def fastShingleSets(
-      df: DataFrame, idCol: String, idAs: String, textCol: String,
-      shingleSize: Int): DataFrame =
-    df.select(col(idCol).as(idAs),
-      graft.expressions.ShingleHashes(col(textCol), shingleSize).as("sh"))
-
-  /** Production band keys from a [[fastShingleSets]] frame (same two-step
-    * projection as the batch families: the band array references `mh`
-    * `bands` times, which stops CollapseProject from inlining — and
-    * recomputing — the signature per band).
-    */
-  private[graft] def fastBandKeys(
-      withSets: DataFrame, idAs: String, numHashes: Int, bands: Int): DataFrame =
-    withSets
-      .select(col(idAs), minHashFromHashes(col("sh"), numHashes).as("mh"))
-      .select(col(idAs), explode(fastBandArray(col("mh"), numHashes, bands)).as("band_key"))
-
-  /** The band-key array itself (one xxhash64 long per band over the
-    * signature slice) — exposed separately so faces that must carry extra
-    * columns through the banding (the streaming probe carries its event
-    * time) explode the SAME keys the artifacts store.
-    */
-  private[graft] def fastBandArray(mh: Column, numHashes: Int, bands: Int): Column = {
-    require(numHashes % bands == 0, "numHashes must divide into bands")
-    val r = numHashes / bands
-    array((0 until bands).map(b => xxhash64(slice(mh, b * r + 1, r), lit(b))): _*)
-  }
-
-  /** The family-independent incremental-LSH probe: corpus band table →
-    * bounded gather → new×corpus candidates → exact-Jaccard verify. ONE
-    * definition so the portable and production variants cannot drift on
-    * the cap/saturation invariant or the asymmetry (corpus-internal pairs
-    * never materialize).
-    *
-    * The corpus VERIFY side joins `(id_c, text)` and builds the set in
-    * the post-attach projection (same guide-§8 move as [[verifyJaccard]]):
-    * the sealed corpus pays one set pass for the band table — required,
-    * every corpus doc must band — but the verify-side set used to be a
-    * SECOND corpus-wide pass in the join input; now only LSH-candidate
-    * corpus rows pay it. The increment keeps joining its precomputed
-    * `newSets` (the batch is small by contract, and its sets already
-    * exist for banding). The artifact/streaming paths
-    * ([[CorpusArtifacts.incrementalNearDupPrepared]],
-    * [[graft.streaming.StreamRouter.incrementalNearDup]]) are separate by
-    * design: their corpus sets are STORED, not recomputed.
-    */
-  private def incrementalNearDupCore(
-      newSets: DataFrame,
-      corpusSets: DataFrame,
-      corpusText: DataFrame, // (id_c, <fresh text col>) — verify side
-      corpusSetOf: Column => Column,
-      bandKeys: (DataFrame, String) => DataFrame,
-      idCol: String,
-      thresholdPpm: Long,
-      maxBucket: Int): DataFrame = {
-    // corpus band table: bounded gather per bucket, drop saturated buckets
-    // (exact-dup territory — run incrementalExact first), re-explode to a
-    // bounded (band_key, id_c) probe table. Singleton buckets stay: one
-    // corpus doc in a bucket can still match a new doc.
-    val corpusBuckets = bandKeys(corpusSets, "id_c")
+  private[dedup] def corpusBandTable(
+      family: MinHashFamily, corpusSets: DataFrame, spec: NearDupSpec): DataFrame =
+    family.bandKeys(corpusSets, spec, "id_c")
       .groupBy("band_key")
-      .agg(graft.expressions.CappedCollectList(col("id_c"), maxBucket + 1).as("ids"))
-      .filter(size(col("ids")) <= maxBucket)
+      .agg(graft.expressions.CappedCollectList(col("id_c"), spec.maxBucket + 1).as("ids"))
+      .filter(size(col("ids")) <= spec.maxBucket)
       .select(col("band_key"), explode(col("ids")).as("id_c"))
 
-    val candidates = bandKeys(newSets, "id_n")
-      .join(corpusBuckets, "band_key")
+  /** The one incremental-LSH probe — increment band keys ⋈ a prebuilt
+    * [[corpusBandTable]] → distinct new×corpus candidates → exact-Jaccard
+    * verify — behind both families and
+    * [[CorpusArtifacts.incrementalNearDupPrepared]]. Corpus-internal pairs
+    * never materialize. The increment joins its own sets (small by
+    * contract, already built for banding); the corpus verify side is
+    * `corpusVerify` (id_c, x) with `corpusSetOf(x)` its set — text and the
+    * set builder, or a stored set and identity.
+    */
+  private[dedup] def incrementalNearDupCore(
+      newDocs: DataFrame, family: MinHashFamily, spec: NearDupSpec,
+      corpusBands: DataFrame, corpusVerify: DataFrame, corpusSetOf: Column => Column,
+      idCol: String, textCol: String, thresholdPpm: Long): DataFrame = {
+    val newSets = family.sets(newDocs, idCol, "id_n", textCol, spec)
+    val candidates = family.bandKeys(newSets, spec, "id_n")
+      .join(corpusBands, "band_key")
       .select("id_n", "id_c").distinct()
-
-    val ctxt = corpusText.columns.filter(_ != "id_c").head
+    val x = corpusVerify.columns.filter(_ != "id_c").head
     candidates
       .join(newSets, "id_n")
-      .join(corpusText, "id_c")
-      .withColumn("jaccard_ppm",
-        jaccardPpm(col("sh"), corpusSetOf(col(ctxt))))
+      .join(corpusVerify, "id_c")
+      .withColumn("jaccard_ppm", jaccardPpm(col("sh"), corpusSetOf(col(x))))
       .filter(col("jaccard_ppm") >= thresholdPpm)
       .select(col("id_n").as(idCol), col("id_c").as("corpus_id"), col("jaccard_ppm"))
   }

@@ -22,10 +22,11 @@ import org.apache.spark.sql.Row
   *    pass-through in the reference too);
   *  - `Router.sinkCounts` over a routed stream is the running per-sink
   *    count (complete/update mode stateful aggregation);
-  *  - `Dedup.incrementalExact` over a stream is a stream-static left join,
-  *    which Structured Streaming executes STATELESSLY, so unlike
-  *    [[dedupExact]] it needs no watermark and recognizes stream-vs-corpus
-  *    duplicates of ANY age — the corpus is the memory;
+  *  - `Dedup.incrementalExact` over a stream is its batch probe, a
+  *    stream-static left join onto the corpus keeper table, which
+  *    Structured Streaming executes STATELESSLY: unlike [[dedupExact]] it
+  *    needs no watermark and recognizes stream-vs-corpus duplicates of ANY
+  *    age — the corpus is the memory;
   *  - `writeFanOut` (here) — append-mode file sink partitioned by
   *    (label-namespace, tag): one directory per sink, exactly-once via the
   *    streaming checkpoint — the streaming analog of the batch fan-out.
@@ -78,13 +79,13 @@ object StreamRouter {
 
   /** Streaming INCREMENTAL NEAR-DUP vs a sealed corpus — the streaming
     * face of [[graft.dedup.CorpusArtifacts.incrementalNearDupPrepared]]:
-    * each arriving document is MinHash-banded (production xxhash64 family,
-    * the SAME [[graft.dedup.Dedup.fastBandArray]] keys the persisted band
-    * table stores), stream-static-joined against the corpus band table
-    * (stateless — the static side plans per micro-batch; at real scale it
-    * is the bucketed artifact, read exchange-free), and verified by exact
-    * Jaccard against the corpus shingle-set table. Corpus-internal pairs
-    * never materialize, same as batch.
+    * each arriving document is MinHash-banded by the production xxhash64
+    * family ([[graft.dedup.Dedup.XxHashFamily]]: the SAME sets and band
+    * keys the persisted tables store), stream-static-joined against the
+    * corpus band table (stateless — the static side plans per micro-batch;
+    * at real scale it is the bucketed artifact, read exchange-free), and
+    * verified by exact Jaccard against the corpus shingle-set table.
+    * Corpus-internal pairs never materialize, same as batch.
     *
     * One streaming-specific step: a new doc colliding with the same corpus
     * doc in several bands yields duplicate (doc, corpus) candidates, which
@@ -114,22 +115,17 @@ object StreamRouter {
       idCol: String = "doc_id",
       textCol: String = "text",
       thresholdPpm: Long = 700000L): DataFrame = {
-    val withSets = stream.select(
-      col(idCol).as("__id_n"), col(tsCol).as("__ts"),
-      graft.expressions.ShingleHashes(col(textCol), spec.shingleSize).as("__sh"))
-    // two-step projection, same reason as the batch families: the band
-    // array references the signature `bands` times
-    val banded = withSets
-      .select(col("__id_n"), col("__ts"), col("__sh"),
-        graft.dedup.Dedup.minHashFromHashes(col("__sh"), spec.numHashes).as("__mh"))
-      .select(col("__id_n"), col("__ts"), col("__sh"),
-        explode(graft.dedup.Dedup.fastBandArray(
-          col("__mh"), spec.numHashes, spec.bands)).as("band_key"))
+    // event time and set ride through the banding: no join back to verify
+    val family = graft.dedup.Dedup.XxHashFamily
+    val banded = family.bandKeys(
+      stream.select(col(idCol).as("__id_n"), col(tsCol).as("__ts"),
+        family.shingleSet(col(textCol), spec.shingleSize).as("sh")),
+      spec, "__id_n", "__ts", "sh")
     banded
       .join(bandTable, "band_key") // stream-static: stateless
       .join(setsTable.withColumnRenamed("sh", "sh_c"), "id_c")
       .withColumn("jaccard_ppm",
-        graft.dedup.Dedup.jaccardPpm(col("__sh"), col("sh_c")))
+        graft.dedup.Dedup.jaccardPpm(col("sh"), col("sh_c")))
       .filter(col("jaccard_ppm") >= thresholdPpm)
       .select(col("__id_n").as(idCol), col("id_c").as("corpus_id"),
         col("jaccard_ppm"), col("__ts").as(tsCol))

@@ -365,6 +365,22 @@ class RoutingGoldenSpec extends AnyFunSuite {
       Some((unkeyedTemplate, None)))
   }
 
+  // --- `${tag_parts[i]}` the placeholder table has no key for (:130-131,
+  // :165-168): keys are "${tag_parts[0]}".."${tag_parts[n-1]}" only, so
+  // "[01]" and an index past any Int are absent keys → "" in normal and
+  // inverted rules alike. Engine and oracle both checked.
+  test("unkeyed ${tag_parts[i]} render empty in normal and inverted rules") {
+    val template = "a.${tag_parts[01]}.${tag_parts[99999999999]}.${tag_parts[1]}"
+    val df = frame(Seq("domain"), "t0.t1", Seq(Seq("x")))
+    for ((rule, want) <- Seq(
+        Rule("domain", "^(x)$", template) -> "a...t1",
+        Rule("domain", "^zzz$", template, invert = true) -> "a...t1")) {
+      assert(routedMap(df, Seq(rule))(0)._1 == want)
+      assert(Oracle.route(Seq(rule), RoutingConfig(), "t0.t1", Map("domain" -> "x")) ==
+        Some((want, None)))
+    }
+  }
+
   // --- pattern forms (:21-43): /re/-delimited and bare are equivalent -----
   test("pattern accepts /re/ and bare forms (regexp_type surface)") {
     val df = frame(Seq("message"), "input", Seq(

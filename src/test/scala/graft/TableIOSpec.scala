@@ -214,6 +214,29 @@ class TableIOSpec extends AnyFunSuite {
     }
   }
 
+  test("incremental exact: an increment carrying text_fp probes through both faces and keeps it") {
+    import graft.dedup.{CorpusArtifacts, Dedup}
+    import graft.sources.BucketedIO
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_fpcol").toString
+    val corpus = Seq(("c2", "alpha"), ("c1", "alpha"), ("c3", "beta"))
+      .toDF("doc_id", "text")
+    // the caller's own text_fp column — the artifact's key name
+    val fresh = Seq(("n1", "alpha", "mine1"), ("n2", "gamma", "mine2"))
+      .toDF("doc_id", "text", "text_fp")
+    CorpusArtifacts.writeExactFingerprints(corpus, "graft_fpcol", s"$dir/fp", buckets = 2)
+    try {
+      val want = Set(("n1", "c1", true, "mine1"), ("n2", "-1", false, "mine2"))
+      for (out <- Seq(Dedup.incrementalExact(fresh, corpus),
+          CorpusArtifacts.incrementalExactPrepared(
+            fresh, BucketedIO.readTable(spark, "graft_fpcol")))) {
+        assert(out.columns.toSeq == Seq("doc_id", "text", "text_fp", "corpus_keeper", "in_corpus"))
+        assert(out.select("doc_id", "corpus_keeper", "in_corpus", "text_fp")
+          .as[(String, String, Boolean, String)].collect().toSet == want)
+      }
+    } finally spark.sql("DROP TABLE IF EXISTS graft_fpcol")
+  }
+
   test("clustersCached: mines once, rereads the artifact, invalidates on fingerprint/key change") {
     import graft.dedup.CorpusArtifacts
     import spark.implicits._
